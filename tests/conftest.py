@@ -34,6 +34,40 @@ def reference_pipeline():
 def spark():
     from unified_ocr_pipeline_spark.plans.session import get_spark
 
+    # The session's default 24g driver heap can exceed the test host's RAM:
+    # the JVM then grows past physical memory (the wide lang_lr model test
+    # reaches ~14 GB resident) and is killed, failing every later Spark
+    # test. Cap the heap at 2/3 of RAM unless SPARK_DRIVER_MEM is set.
+    ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+    os.environ.setdefault("SPARK_DRIVER_MEM", f"{max(2, min(24, ram_gb * 2 // 3))}g")
     spark = get_spark(app_name="tests", cores=8, shuffle_partitions=8)
     yield spark
     spark.stop()
+
+
+def count_jobs(spark, fn):
+    """Run ``fn()`` and return ``(result, number of Spark jobs it ran)``.
+
+    Job ids are assigned sequentially per SparkContext, so the count is
+    the id gap between two one-task marker jobs run before and after
+    ``fn`` (found through ``sc.statusTracker()`` by their job group). It
+    covers every job in between whatever thread submitted it — streaming
+    micro-batches included — so nothing else may run jobs concurrently."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+
+    def marker() -> int:
+        sc.setJobGroup(group, "count_jobs marker")
+        try:
+            sc.parallelize([0], 1).count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return max(sc.statusTracker().getJobIdsForGroup(group))
+
+    before = marker()
+    result = fn()
+    after = marker()
+    return result, after - before - 1

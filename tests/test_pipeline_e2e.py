@@ -10,7 +10,8 @@ import pytest
 
 from unified_ocr_pipeline_spark.sources.fixtures import write_pages_parquet, HEAVY_HOST
 from unified_ocr_pipeline_spark.oracle.run import run_oracle
-from unified_ocr_pipeline_spark.plans.pipeline import ExtractionPipeline
+from unified_ocr_pipeline_spark.plans import pipeline as pipeline_mod
+from unified_ocr_pipeline_spark.plans.pipeline import ExtractionPipeline, auto_num_buckets
 
 N_ROWS = 400
 MAX_BYTES = 64 * 1024
@@ -149,6 +150,20 @@ def test_resume_skips_completed_buckets(run_output, spark, pages_path, golden):
     assert pipe.read_extracted().count() == len(golden)
 
 
+def test_resume_of_complete_epoch_job_budget(spark, pages_path, tmp_path):
+    """A resume over a finished epoch reads the input schema and the
+    epoch's manifest once each, and runs nothing else."""
+    from conftest import count_jobs
+
+    pipe = ExtractionPipeline(
+        spark, str(tmp_path / "out"), num_buckets=16, salt_factor=4, max_bytes=MAX_BYTES
+    )
+    first = pipe.run(pages_path)
+    res, jobs = count_jobs(spark, lambda: pipe.run(pages_path))
+    assert res.buckets_processed == 0 and res.buckets_skipped == first.buckets_processed
+    assert jobs <= 2, jobs
+
+
 def test_partial_manifest_resume(spark, pages_path, golden, tmp_path_factory):
     """Kill-after-partition-k simulation: pre-write manifests for a subset of
     buckets, run with resume, assert only the missing buckets are processed
@@ -255,3 +270,115 @@ def test_resume_adopts_epoch_bucket_numbering(spark, pages_path, tmp_path_factor
     assert (pipe2.num_buckets, pipe2.salt_factor) == (16, 4)  # adopted
     assert res2.buckets_processed == 0 and res2.buckets_skipped == 16
     assert pipe2.read_extracted().count() == res1.rows_written
+
+
+# -- input-sized bucket count ---------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def tiny_pages_path(tmp_path_factory):
+    p = str(tmp_path_factory.mktemp("tiny") / "pages")
+    write_pages_parquet(p, 24, seed=7, max_bytes=MAX_BYTES)
+    return p
+
+
+def _layouts(spark, pipe):
+    """{(epoch, num_buckets, salt_factor)} recorded in the manifest."""
+    m = spark.read.parquet(pipe.manifest_path)
+    return {
+        (r["epoch"], r["num_buckets"], r["salt_factor"])
+        for r in m.select("epoch", "num_buckets", "salt_factor").distinct().collect()
+    }
+
+
+def _written_buckets(pipe, epoch=0):
+    return {
+        int(d.split("=", 1)[1])
+        for d in os.listdir(f"{pipe.extracted_path}/epoch={epoch}")
+        if d.startswith("bucket=")
+    }
+
+
+def test_auto_buckets_tiny_input_gets_salt_factor(spark, tiny_pages_path, tmp_path):
+    """A few KB of input must not pay for the cluster-sized bucket count:
+    it gets salt_factor buckets, so salting still splits the heavy host."""
+    pipe = ExtractionPipeline(spark, str(tmp_path / "out"), salt_factor=4, max_bytes=MAX_BYTES)
+    res = pipe.run(tiny_pages_path)
+    assert pipe.num_buckets == 4
+    assert 0 < res.buckets_processed <= 4
+    assert _written_buckets(pipe) <= set(range(4))
+    assert _layouts(spark, pipe) == {(0, 4, 4)}
+    assert res.rows_written == pipe.read_extracted().count()
+
+
+def test_auto_buckets_capped_at_cluster_size(spark):
+    cap = auto_num_buckets(spark, salt_factor=8)
+    group = 8 * pipeline_mod._BYTES_PER_BUCKET  # bytes per run of 8 salted buckets
+    assert auto_num_buckets(spark, salt_factor=8, input_bytes=1 << 50) == cap
+    assert auto_num_buckets(spark, salt_factor=8, input_bytes=0) == 8
+    assert auto_num_buckets(spark, salt_factor=8, input_bytes=group) == 8
+    assert auto_num_buckets(spark, salt_factor=8, input_bytes=group + 1) == 16
+    for size in (1, group * 3 + 5, group * 1000):
+        n = auto_num_buckets(spark, salt_factor=8, input_bytes=size)
+        assert n % 8 == 0 and 8 <= n <= cap
+
+
+def test_explicit_num_buckets_never_resized(spark, tiny_pages_path, tmp_path):
+    pipe = ExtractionPipeline(
+        spark, str(tmp_path / "out"), num_buckets=16, salt_factor=4, max_bytes=MAX_BYTES
+    )
+    pipe.run(tiny_pages_path)
+    assert pipe.num_buckets == 16
+    assert _layouts(spark, pipe) == {(0, 16, 4)}
+
+
+def test_auto_buckets_resize_per_streaming_tick(spark, tmp_path, monkeypatch):
+    """One auto-sized pipeline reused across cron ticks sizes each epoch
+    to that tick's input, and each epoch's buckets stay within its own
+    recorded layout."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from unified_ocr_pipeline_spark.sources.fixtures import (
+        PAGES_ARROW_SCHEMA,
+        generate_pages_rows,
+    )
+    from unified_ocr_pipeline_spark.streaming.incremental import run_available_now
+
+    # shrink the per-bucket byte budget so KB-sized ticks span several sizes
+    monkeypatch.setattr(pipeline_mod, "_BYTES_PER_BUCKET", 8 * 1024)
+    pages_dir = tmp_path / "incoming"
+    pages_dir.mkdir()
+    pipe = ExtractionPipeline(spark, str(tmp_path / "out"), salt_factor=2, max_bytes=MAX_BYTES)
+    rows = generate_pages_rows(64, seed=5, max_bytes=MAX_BYTES)
+    for k, batch in enumerate((rows[:4], rows[4:])):
+        pq.write_table(
+            pa.Table.from_pylist(batch, schema=PAGES_ARROW_SCHEMA),
+            f"{pages_dir}/tick{k}.parquet",
+        )
+        assert run_available_now(spark, str(pages_dir), pipe, str(tmp_path / "ckpt")) == 1
+
+    layouts = sorted(_layouts(spark, pipe))
+    assert [e for e, _, _ in layouts] == [0, 1]
+    (_, small, _), (_, large, _) = layouts
+    assert all(sf == 2 for _, _, sf in layouts)
+    assert 2 <= small < large <= auto_num_buckets(spark, salt_factor=2)
+    assert _written_buckets(pipe, 0) <= set(range(small))
+    assert _written_buckets(pipe, 1) <= set(range(large))
+    assert pipe.read_extracted().count() == len({r["url"] for r in rows[:4]}) + len(
+        {r["url"] for r in rows[4:]}
+    )
+
+
+def test_auto_resume_adopts_recorded_layout(spark, tiny_pages_path, tmp_path, monkeypatch):
+    """An auto-sized resume whose own sizing would differ (here: a smaller
+    per-bucket budget) must still adopt the epoch's recorded layout."""
+    out = str(tmp_path / "out")
+    first = ExtractionPipeline(spark, out, salt_factor=4, max_bytes=MAX_BYTES).run(tiny_pages_path)
+    monkeypatch.setattr(pipeline_mod, "_BYTES_PER_BUCKET", 1024)
+    pipe = ExtractionPipeline(spark, out, salt_factor=4, max_bytes=MAX_BYTES)
+    res = pipe.run(tiny_pages_path)
+    assert (pipe.num_buckets, pipe.salt_factor) == (4, 4)
+    assert res.buckets_processed == 0 and res.buckets_skipped == first.buckets_processed
+    assert _layouts(spark, pipe) == {(0, 4, 4)}
+    assert pipe.read_extracted().count() == first.rows_written

@@ -132,6 +132,10 @@ def test_pipeline_run_preflight_gate(spark, tmp_path):
     )
     with pytest.raises(PreflightError):
         pipe.run(bad)
+    # an unreadable input fails the same gate, with the full report
+    with pytest.raises(PreflightError) as exc:
+        pipe.run(str(tmp_path / "nope"))
+    assert any("input unreadable" in p for p in exc.value.report["problems"])
 
 
 # ---------------------------------------------------------------------------

@@ -49,6 +49,34 @@ def test_available_now_incremental(spark, tmp_path):
     assert urls_all == {r["url"] for r in rows}
 
 
+def test_tick_job_count_flat_as_epochs_accumulate(spark, tmp_path):
+    """A tick's fixed cost must not grow with the table's history: with
+    more than 32 bucket dirs per epoch, listing every epoch ever written
+    costs one parallel listing job per epoch, so each tick would run one
+    more job than the tick before. Reads are scoped to the tick's own
+    epoch."""
+    from conftest import count_jobs
+
+    pages_dir = tmp_path / "pages"
+    pages_dir.mkdir()
+    ckpt = str(tmp_path / "ckpt")
+    pipe = ExtractionPipeline(spark, str(tmp_path / "out"), num_buckets=64, salt_factor=8)
+    rows = generate_pages_rows(4 * 150, seed=11)
+    jobs = []
+    for k in range(4):
+        _write_batch(pages_dir, rows[k * 150:(k + 1) * 150], f"t{k}")
+        n, j = count_jobs(
+            spark, lambda: run_available_now(spark, str(pages_dir), pipe, ckpt)
+        )
+        assert n == 1
+        jobs.append(j)
+    for epoch in range(4):
+        buckets = [d for d in (tmp_path / "out" / "extracted" / f"epoch={epoch}").iterdir()
+                   if d.name.startswith("bucket=")]
+        assert len(buckets) > 32, "epoch too narrow to trigger a parallel listing"
+    assert jobs[3] <= jobs[1], jobs
+
+
 def test_windowed_ingest_stats_with_watermark(spark, tmp_path):
     from unified_ocr_pipeline_spark.streaming.incremental import windowed_ingest_stats
 

@@ -9,6 +9,12 @@ Scale design (BASELINE.json north_rule / SURVEY.md §4):
   cluster) while a heavy host (30%+ of a crawl) is split S ways instead of
   melting one partition. Uniform-hash would also kill skew but destroys
   host locality; salting keeps both. S and N are knobs.
+- **Bucket count tracks the cluster and the input.** With
+  ``num_buckets=None`` each ``run`` sizes the bucket count to the bytes it
+  reads (about one bucket per MiB, a salt multiple, capped at the
+  cluster-sized ``auto_num_buckets``): a 300-doc cron tick writes a
+  handful of files and lineage rows, not 64 of each. The manifest records
+  the layout per epoch, so a resume replays it whatever the input size.
 - **Checkpointed partition manifests (resume).** The unit of work is the
   bucket. A manifest row (bucket, row_count, content_hash, run_id,
   completed_at) is appended only AFTER that bucket's output is durably
@@ -35,15 +41,17 @@ import uuid
 from dataclasses import dataclass
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..kernels import document as D
-from ..sources.tables import read_input
+from ..sources.tables import is_table_spec, read_input
 from .extraction import extract_stage, gate_oversize
 
-DEFAULT_NUM_BUCKETS = 64  # floor — the auto-sizer only goes up from here
+DEFAULT_NUM_BUCKETS = 64  # floor of the cluster-sized cap
 DEFAULT_SALT_FACTOR = 8
+# input bytes per bucket when num_buckets is sized to the input
+_BYTES_PER_BUCKET = 1 << 20
 
 
 def auto_num_buckets(
@@ -51,20 +59,30 @@ def auto_num_buckets(
     salt_factor: int = DEFAULT_SALT_FACTOR,
     floor: int = DEFAULT_NUM_BUCKETS,
     per_core: int = 4,
+    input_bytes: Optional[int] = None,
 ) -> int:
-    """Size the bucket count from the cluster, not a constant.
+    """Size the bucket count from the cluster and the input, not a constant.
 
     The bucket exchange and the bucketed write are the pipeline's ONLY
     shuffle; their parallelism is capped at num_buckets, so a forgotten
     fixed default serializes the post-extraction stage on a big cluster
-    (64 tasks on 1000 executors). Default: ``per_core ×`` total cores
+    (64 tasks on 1000 executors). The cap: ``per_core ×`` total cores
     (headroom for skew/stragglers), at least ``floor``, rounded up to a
-    multiple of ``salt_factor`` (salted_bucket requires divisibility)."""
+    multiple of ``salt_factor`` (salted_bucket requires divisibility).
+
+    Each bucket also costs a file per writing task plus a metrics and a
+    manifest row, so a small input must not pay for the cap: given
+    ``input_bytes``, the count is ``salt_factor × ceil(input_bytes /
+    (salt_factor × 1 MiB))``, at least ``salt_factor`` and at most the
+    cap. None (input size unknown, e.g. a catalog table) → the cap."""
     cores = spark.sparkContext.defaultParallelism
     n = max(floor, per_core * cores)
     if n % salt_factor:
         n += salt_factor - (n % salt_factor)
-    return n
+    if input_bytes is None:
+        return n
+    host_groups = -(-input_bytes // (salt_factor * _BYTES_PER_BUCKET))
+    return min(n, salt_factor * max(1, host_groups))
 
 
 def with_host(df: DataFrame) -> DataFrame:
@@ -114,7 +132,9 @@ class ExtractionPipeline:
         self.manifest_path = os.path.join(output_dir, "manifests")
         self.metrics_path = os.path.join(output_dir, "metrics")
         # None → derive from cluster size so post-extraction parallelism
-        # scales with executors instead of a fixed 64-task ceiling
+        # scales with executors instead of a fixed 64-task ceiling; each
+        # run then shrinks it to its input (see auto_num_buckets)
+        self._size_buckets_to_input = num_buckets is None
         self.num_buckets = (
             num_buckets
             if num_buckets is not None
@@ -149,7 +169,7 @@ class ExtractionPipeline:
         except Exception:
             return None
 
-    def _tune_input_splits(self, pages_path: str, per_core_splits: int = 2):
+    def _tune_input_splits(self, size: Optional[int], per_core_splits: int = 2):
         """Size parquet scan splits to the INPUT, not a constant.
 
         The extraction kernel runs on scan partitions (extract-before-
@@ -165,12 +185,10 @@ class ExtractionPipeline:
         relative to the cluster. Open-cost shrinks with the split so
         many-tiny-file crawls don't pack files onto idle cores.
 
-        Returns the saved (maxPartitionBytes, openCostInBytes) pair so
-        ``run`` can restore the session state, or None when untouched.
+        ``size`` is the input's byte size (None when unknown). Returns the
+        saved (maxPartitionBytes, openCostInBytes) pair so ``run`` can
+        restore the session state, or None when untouched.
         """
-        if pages_path.startswith("table:"):
-            return None
-        size = self._input_size_bytes(pages_path)
         if not size:
             return None
         conf = self.spark.conf
@@ -201,47 +219,56 @@ class ExtractionPipeline:
                 conf.set(key, val)
 
     # -- manifests -----------------------------------------------------------
-    def completed_buckets(self, epoch: int = 0) -> Optional[DataFrame]:
-        try:
-            m = self.spark.read.parquet(self.manifest_path)
-        except Exception:
-            return None
-        return m.where(m.epoch == epoch).select("bucket").distinct()
+    def _read_manifest(self, epoch: int) -> list:
+        """This epoch's manifest rows (bucket, num_buckets, salt_factor) —
+        one Spark job, at most one row per bucket. Everything a run needs
+        from the manifest (the adopted layout, the done-bucket set, the
+        cleanup keep-set) derives from these rows.
 
-    def _adopt_epoch_bucketing(self, epoch: int) -> None:
-        """Bucket ids belong to the EPOCH, not the cluster: a resume on a
-        differently-sized cluster would re-derive a different auto
-        num_buckets, re-number every page's bucket, and the manifest
-        anti-join would then skip pages that were never processed under
-        the new numbering (silent loss). Manifest rows record the
+        Only ``manifests/epoch=E`` is listed, so the cost does not grow
+        with the table's history, and the read schema is given, so no
+        inference job runs; rows from before the layout columns existed
+        read them as null. A manifest table without epoch dirs (rewritten
+        by other tooling) is read whole and filtered."""
+        fs, Path = self._fs(self.manifest_path)
+        root = Path(self.manifest_path)
+        if not fs.exists(root):
+            return []
+        reader = self.spark.read.schema(
+            "bucket INT, num_buckets INT, salt_factor INT, epoch INT"
+        )
+        epoch_dir = Path(f"{self.manifest_path}/epoch={epoch}")
+        if fs.exists(epoch_dir):
+            m = reader.parquet(epoch_dir.toString())
+        elif any(
+            st.getPath().getName().startswith("epoch=")
+            for st in fs.listStatus(root)
+        ):
+            return []  # partitioned table with nothing for this epoch yet
+        else:
+            m = reader.parquet(self.manifest_path).where(F.col("epoch") == epoch)
+        return m.select("bucket", "num_buckets", "salt_factor").collect()
+
+    def _adopt_epoch_bucketing(self, epoch: int, manifest_rows: list) -> None:
+        """Bucket ids belong to the EPOCH, not the cluster or the input: a
+        resume on a differently-sized cluster or input would re-derive a
+        different auto num_buckets, re-number every page's bucket, and the
+        manifest anti-join would then skip pages that were never processed
+        under the new numbering (silent loss). Manifest rows record the
         (num_buckets, salt_factor) they were written with; a resuming run
         adopts them. Rows from before these columns existed fall back to
         the current config (documented caveat, pre-release tables only)."""
-        try:
-            m = self.spark.read.parquet(self.manifest_path)
-        except Exception:
+        layouts = {(r["num_buckets"], r["salt_factor"]) for r in manifest_rows}
+        if not layouts or layouts == {(None, None)}:
             return
-        if "num_buckets" not in m.columns:
-            return
-        rows = (
-            m.where(m.epoch == epoch)
-            .select("num_buckets", "salt_factor")
-            .distinct()
-            .collect()
-        )
-        if not rows:
-            return
-        if len(rows) > 1:
+        if len(layouts) > 1:
             raise ValueError(
                 f"manifest for epoch {epoch} records conflicting bucket "
-                f"configs {sorted((r[0], r[1]) for r in rows)} — refusing "
-                "to resume"
+                f"configs {sorted(layouts, key=str)} — refusing to resume"
             )
-        recorded = (rows[0]["num_buckets"], rows[0]["salt_factor"])
-        if recorded != (self.num_buckets, self.salt_factor):
-            self.num_buckets, self.salt_factor = recorded
+        self.num_buckets, self.salt_factor = layouts.pop()
 
-    def _clear_incomplete_buckets(self, epoch: int, skipped_df) -> None:
+    def _clear_incomplete_buckets(self, epoch: int, done: set) -> None:
         """Delete output dirs of buckets NOT in the manifest for this epoch
         (those are exactly the buckets this run may rewrite).
 
@@ -260,11 +287,6 @@ class ExtractionPipeline:
         fs = epoch_path.getFileSystem(conf)
         if not fs.exists(epoch_path):
             return  # fresh run/epoch: nothing to clear
-        done = (
-            {r["bucket"] for r in skipped_df.collect()}
-            if skipped_df is not None
-            else set()
-        )
         to_delete = []
         for status in fs.listStatus(epoch_path):
             name = status.getPath().getName()
@@ -293,11 +315,20 @@ class ExtractionPipeline:
         epoch: int = 0,
         preflight: bool = True,
     ) -> RunResult:
-        """Input-split-tuned wrapper around :meth:`_run_impl` — scan splits
-        are sized to the input (extraction parallelism == scan splits, see
-        ``_tune_input_splits``) and the session split config is restored on
-        every exit path."""
-        saved_split_conf = self._tune_input_splits(pages_path)
+        """Input-sized wrapper around :meth:`_run_impl` — the input is
+        listed once, scan splits are sized to it (extraction parallelism ==
+        scan splits, see ``_tune_input_splits``), an auto-sized pipeline
+        re-sizes its bucket count to it (``auto_num_buckets``; a resume
+        then adopts the epoch's recorded layout instead), and the session
+        split config is restored on every exit path."""
+        input_bytes = (
+            None if is_table_spec(pages_path) else self._input_size_bytes(pages_path)
+        )
+        if self._size_buckets_to_input:
+            self.num_buckets = auto_num_buckets(
+                self.spark, self.salt_factor, input_bytes=input_bytes
+            )
+        saved_split_conf = self._tune_input_splits(input_bytes)
         try:
             return self._run_impl(pages_path, resume, epoch, preflight)
         finally:
@@ -316,39 +347,46 @@ class ExtractionPipeline:
         at-least-once input delivery composes to exactly-once output.
 
         ``preflight`` (P8, reference :63-86): validate backends, kernel
-        imports, and the input schema BEFORE submitting any job — one
-        footer read, raises PreflightError with the full health report on
-        a misconfigured cluster instead of a mid-job executor trace."""
+        imports, and the input schema BEFORE submitting any work job —
+        checked on the schema of the input DataFrame the run scans, so the
+        input is inferred once; raises PreflightError with the full health
+        report on a misconfigured cluster instead of a mid-job executor
+        trace."""
+        from .preflight import require_healthy
+
         t0 = time.perf_counter()
         run_id = uuid.uuid4().hex[:12]
         spark = self.spark
 
+        # table:<name> specs resolve through the DSv2 catalog (Iceberg in
+        # production sessions); plain paths read parquet — sources/tables.py
+        try:
+            pages = read_input(spark, pages_path)
+        except Exception:
+            if preflight:
+                # the full health report, "input unreadable" included
+                require_healthy(spark, pages_path)
+            raise
         if preflight:
-            from .preflight import require_healthy
-
-            require_healthy(spark, pages_path)
+            require_healthy(spark, pages_path, input_df=pages)
 
         # a compact_epoch killed mid-swap leaves this epoch stashed under a
         # hidden dir Spark can't see; running on top of that state would
         # rewrite only unmanifested buckets and then strand the stash —
         # recover it BEFORE any read of the extracted table
         self._recover_compaction_stash(epoch)
-        if resume:
-            self._adopt_epoch_bucketing(epoch)
+        manifest_rows = self._read_manifest(epoch) if resume else []
+        self._adopt_epoch_bucketing(epoch, manifest_rows)
+        done = {r["bucket"] for r in manifest_rows}
+        skipped = len(done)
 
-        # table:<name> specs resolve through the DSv2 catalog (Iceberg in
-        # production sessions); plain paths read parquet — sources/tables.py
-        pages = read_input(spark, pages_path)
         pages = with_host(pages)
         pages = salted_bucket(pages, self.num_buckets, self.salt_factor)
-
-        skipped = 0
-        done = self.completed_buckets(epoch) if resume else None
-        if done is not None:
-            skipped = done.count()  # manifest table is tiny (≤ num_buckets)
-            # J2: broadcast left-anti against the checkpoint manifest —
-            # completed buckets never reach the extraction stage.
-            pages = pages.join(F.broadcast(done), "bucket", "left_anti")
+        if done:
+            # J2: anti-join against the checkpoint manifest as an IN-list
+            # (≤ num_buckets literals) — completed buckets never reach the
+            # extraction stage, and no broadcast job runs.
+            pages = pages.where(~F.col("bucket").isin(sorted(done)))
 
         # X9 size gate at scan: oversized payloads are nulled immediately so
         # no downstream stage (Arrow boundary OR shuffle disk) ever carries
@@ -359,10 +397,11 @@ class ExtractionPipeline:
         # a partitioned append of 0 rows creates an extracted dir with no
         # schema-bearing part file, which a first-ever run could not then
         # re-read (AnalysisException) to build metrics.
-        if pages.isEmpty():
+        # every bucket done → nothing can survive the anti-join; skip the scan
+        if done >= set(range(self.num_buckets)) or pages.isEmpty():
             # still clear un-manifested partial dirs a crashed predecessor
             # may have left — same contract as the full path below
-            self._clear_incomplete_buckets(epoch, skipped_df=done)
+            self._clear_incomplete_buckets(epoch, done)
             return RunResult(
                 run_id=run_id,
                 buckets_processed=0,
@@ -421,7 +460,7 @@ class ExtractionPipeline:
         # staging commit measured ~3x slower at 32-way parallelism; the
         # crash story is identical (partial un-manifested buckets are
         # deleted and rewritten on restart).
-        self._clear_incomplete_buckets(epoch, skipped_df=done)
+        self._clear_incomplete_buckets(epoch, done)
         (
             extracted.write.mode("append")
             .partitionBy("epoch", "bucket")
@@ -429,16 +468,20 @@ class ExtractionPipeline:
         )
 
         # read back ONLY the light columns to build manifests + metrics —
-        # partition-pruned to this epoch (columnar scan; extracted_text is
-        # hashed but never fully re-materialized)
+        # only this epoch's dir is listed (basePath keeps epoch and bucket
+        # as columns), so the read-back does not grow with the number of
+        # epochs ever written (columnar scan; extracted_text is hashed but
+        # never fully re-materialized)
         # An extracted table written by an older engine version may predate
         # row_hash, and single-footer schema inference may then miss it.
         # mergeSchema would handle that but reads EVERY part footer (one
         # fixed job over ~num_buckets × tasks files per run — measurable
         # drag on fast wide runs); instead read plain and, only in the
         # legacy-mixed case, recompute the hash from the data columns.
-        back = spark.read.parquet(self.extracted_path).where(
-            (F.col("epoch") == epoch) & (F.col("run_id") == run_id)
+        back = (
+            spark.read.option("basePath", self.extracted_path)
+            .parquet(f"{self.extracted_path}/epoch={epoch}")
+            .where(F.col("run_id") == run_id)
         )
         if "row_hash" not in back.columns:
             back = back.withColumn(
@@ -503,23 +546,22 @@ class ExtractionPipeline:
             .withColumn("num_buckets", F.lit(self.num_buckets))
             .withColumn("salt_factor", F.lit(self.salt_factor))
         )
+        # bucket/row totals observed while the manifest (one row per
+        # bucket) is written — no extra action over the lineage
+        totals = Observation(f"totals_{run_id}")
+        manifest = manifest.observe(
+            totals, F.count("*").alias("buckets"), F.sum("row_count").alias("rows")
+        )
         manifest.write.mode(lineage_mode).partitionBy("epoch").parquet(
             self.manifest_path
         )
-
-        # bucket/row totals from the persisted per-bucket aggregation —
-        # no extra scan of the manifest table
-        stats = metrics.agg(
-            F.count_distinct("bucket").alias("b"), F.sum("row_count").alias("r")
-        ).first()
         metrics.unpersist()
-        n_buckets = stats["b"] or 0
-        rows = int(stats["r"] or 0)
+        stats = totals.get
         return RunResult(
             run_id=run_id,
-            buckets_processed=n_buckets,
+            buckets_processed=int(stats["buckets"] or 0),
             buckets_skipped=skipped,
-            rows_written=rows,
+            rows_written=int(stats["rows"] or 0),
             wall_sec=time.perf_counter() - t0,
         )
 

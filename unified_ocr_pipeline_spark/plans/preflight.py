@@ -10,14 +10,16 @@ mid-job executor stack trace into one clear driver-side JSON report.
 
 The check is cheap by design — imports plus one parquet footer read — so
 ``ExtractionPipeline.run`` can afford it on every invocation (including
-per micro-batch in streaming).
+per micro-batch in streaming). The pipeline passes the input DataFrame it
+is about to scan (``input_df``), so even the footer read is shared with
+the job rather than repeated.
 """
 
 from __future__ import annotations
 
 from typing import Any, Dict, Optional
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # columns the extraction stage consumes, with their expected Spark types
 # (plans/extraction.py:extract_stage input contract)
@@ -42,12 +44,16 @@ _DEPENDENCIES = ("pandas", "pyarrow", "numpy")
 
 
 def health_check(
-    spark: Optional[SparkSession] = None, input_path: Optional[str] = None
+    spark: Optional[SparkSession] = None,
+    input_path: Optional[str] = None,
+    input_df: Optional[DataFrame] = None,
 ) -> Dict[str, Any]:
     """Return the health report. ``status`` is 'healthy' only if a parse
     backend is available, every kernel module imports, every dependency is
     present, and (when ``input_path`` is given) the input schema carries
-    all required columns at the expected types."""
+    all required columns at the expected types. ``input_df``, when given,
+    is ``input_path`` already read: its schema is checked instead of
+    reading the input again."""
     import importlib
 
     report: Dict[str, Any] = {
@@ -93,7 +99,9 @@ def health_check(
                 # no data scan (table: specs resolve via sources/tables)
                 from ..sources.tables import read_input
 
-                schema = read_input(spark, input_path).schema
+                if input_df is None:
+                    input_df = read_input(spark, input_path)
+                schema = input_df.schema
                 have = {f.name: f.dataType.simpleString() for f in schema.fields}
                 for col, want in REQUIRED_INPUT_COLUMNS.items():
                     got = have.get(col)
@@ -123,12 +131,14 @@ class PreflightError(RuntimeError):
 
 
 def require_healthy(
-    spark: Optional[SparkSession] = None, input_path: Optional[str] = None
+    spark: Optional[SparkSession] = None,
+    input_path: Optional[str] = None,
+    input_df: Optional[DataFrame] = None,
 ) -> Dict[str, Any]:
     """health_check that raises :class:`PreflightError` when unhealthy —
     the reference's ``raise Exception("No PDF processing backend
     available")`` gate (:85-86), generalized."""
-    report = health_check(spark, input_path)
+    report = health_check(spark, input_path, input_df)
     if report["status"] != "healthy":
         raise PreflightError(report)
     return report
