@@ -4752,7 +4752,7 @@ def _lang_lr_oracle(
         )
         final = (
             "SELECT lang_pred, count(*) AS n_docs, "
-            "sum(CASE WHEN lang_pred = lang THEN 1 ELSE 0 END) AS n_correct "
+            "CAST(sum(CASE WHEN lang_pred = lang THEN 1 ELSE 0 END) AS BIGINT) AS n_correct "
             "FROM pred GROUP BY lang_pred"
         )
     else:

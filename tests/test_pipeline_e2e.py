@@ -178,9 +178,9 @@ def test_partial_manifest_resume(spark, pages_path, golden, tmp_path_factory):
     keep_buckets = [r["bucket"] for r in man.select("bucket").distinct().collect()][::2]
     import shutil
 
-    man.where(man.bucket.isin(keep_buckets)).write.mode("overwrite").parquet(
-        pipe.manifest_path + "_tmp"
-    )
+    man.where(man.bucket.isin(keep_buckets)).write.mode("overwrite").partitionBy(
+        "epoch"
+    ).parquet(pipe.manifest_path + "_tmp")
     shutil.rmtree(pipe.manifest_path)
     os.rename(pipe.manifest_path + "_tmp", pipe.manifest_path)
 
@@ -267,7 +267,7 @@ def test_resume_adopts_epoch_bucket_numbering(spark, pages_path, tmp_path_factor
         spark, out, num_buckets=32, salt_factor=8, max_bytes=MAX_BYTES
     )
     res2 = pipe2.run(pages_path)          # resume=True default
-    assert (pipe2.num_buckets, pipe2.salt_factor) == (16, 4)  # adopted
+    assert (res2.num_buckets, res2.salt_factor) == (16, 4)  # adopted
     assert res2.buckets_processed == 0 and res2.buckets_skipped == 16
     assert pipe2.read_extracted().count() == res1.rows_written
 
@@ -299,12 +299,50 @@ def _written_buckets(pipe, epoch=0):
     }
 
 
+def test_run_on_dataframe_equals_run_on_path(spark, pages_path, golden, tmp_path):
+    """A DataFrame input (what a cron tick passes) and the path it was read
+    from are the same run: same bucket layout, same per-url text, same
+    manifest."""
+    def outcome(pages, out):
+        pipe = ExtractionPipeline(spark, str(tmp_path / out), max_bytes=MAX_BYTES)
+        res = pipe.run(pages)
+        text = {
+            r["url"]: r["extracted_text"]
+            for r in pipe.read_extracted().select("url", "extracted_text").collect()
+        }
+        manifest = {
+            (r["bucket"], r["row_count"], r["content_hash"])
+            for r in spark.read.parquet(pipe.manifest_path).collect()
+        }
+        return (res.num_buckets, res.salt_factor), text, manifest
+
+    by_path = outcome(pages_path, "path")
+    by_df = outcome(spark.read.parquet(pages_path), "df")
+    assert by_df == by_path
+    assert set(by_df[1]) == set(golden)
+
+
+def test_resumed_layout_does_not_stick_to_pipeline(spark, pages_path, tiny_pages_path, tmp_path):
+    """Adopting a resumed epoch's layout is for that run only: the next
+    epoch is written with the pipeline's own configured layout."""
+    out = str(tmp_path / "out")
+    ExtractionPipeline(spark, out, num_buckets=16, salt_factor=4, max_bytes=MAX_BYTES).run(
+        tiny_pages_path
+    )
+    pipe = ExtractionPipeline(spark, out, num_buckets=32, salt_factor=8, max_bytes=MAX_BYTES)
+    resumed = pipe.run(tiny_pages_path)
+    nxt = pipe.run(tiny_pages_path, epoch=1)
+    assert _layouts(spark, pipe) == {(0, 16, 4), (1, 32, 8)}
+    assert (resumed.num_buckets, resumed.salt_factor) == (16, 4)
+    assert (nxt.num_buckets, nxt.salt_factor) == (32, 8)
+
+
 def test_auto_buckets_tiny_input_gets_salt_factor(spark, tiny_pages_path, tmp_path):
     """A few KB of input must not pay for the cluster-sized bucket count:
     it gets salt_factor buckets, so salting still splits the heavy host."""
     pipe = ExtractionPipeline(spark, str(tmp_path / "out"), salt_factor=4, max_bytes=MAX_BYTES)
     res = pipe.run(tiny_pages_path)
-    assert pipe.num_buckets == 4
+    assert res.num_buckets == 4
     assert 0 < res.buckets_processed <= 4
     assert _written_buckets(pipe) <= set(range(4))
     assert _layouts(spark, pipe) == {(0, 4, 4)}
@@ -327,8 +365,8 @@ def test_explicit_num_buckets_never_resized(spark, tiny_pages_path, tmp_path):
     pipe = ExtractionPipeline(
         spark, str(tmp_path / "out"), num_buckets=16, salt_factor=4, max_bytes=MAX_BYTES
     )
-    pipe.run(tiny_pages_path)
-    assert pipe.num_buckets == 16
+    res = pipe.run(tiny_pages_path)
+    assert res.num_buckets == 16
     assert _layouts(spark, pipe) == {(0, 16, 4)}
 
 
@@ -378,7 +416,7 @@ def test_auto_resume_adopts_recorded_layout(spark, tiny_pages_path, tmp_path, mo
     monkeypatch.setattr(pipeline_mod, "_BYTES_PER_BUCKET", 1024)
     pipe = ExtractionPipeline(spark, out, salt_factor=4, max_bytes=MAX_BYTES)
     res = pipe.run(tiny_pages_path)
-    assert (pipe.num_buckets, pipe.salt_factor) == (4, 4)
+    assert (res.num_buckets, res.salt_factor) == (4, 4)
     assert res.buckets_processed == 0 and res.buckets_skipped == first.buckets_processed
     assert _layouts(spark, pipe) == {(0, 4, 4)}
     assert pipe.read_extracted().count() == first.rows_written

@@ -168,7 +168,7 @@ def test_asof_join_single_exchange(spark):
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
 
 
-def test_auto_num_buckets_scales_with_cluster(spark):
+def test_auto_num_buckets_scales_with_cluster(spark, tmp_path):
     """Post-extraction parallelism (the bucket exchange AND the bucketed
     write) is capped at num_buckets; the auto-sizer must therefore track
     cluster size — ≥ 4× total cores with skew headroom, never below the
@@ -187,10 +187,17 @@ def test_auto_num_buckets_scales_with_cluster(spark):
     # non-divisible raw value rounds UP to a salt multiple
     n5 = auto_num_buckets(spark, salt_factor=8, floor=1, per_core=5)
     assert n5 % 8 == 0 and n5 >= 5 * cores
-    # the pipeline default (num_buckets=None) picks the auto size
-    pipe = ExtractionPipeline(spark, "/tmp/_unused_out")
-    assert pipe.num_buckets == auto_num_buckets(spark)
-    assert pipe.num_buckets >= 4 * cores
+    # the pipeline default (num_buckets=None) picks the auto size for an
+    # input whose byte size is unknown (an RDD-backed DataFrame reports
+    # spark.sql.defaultSizeInBytes, like an unanalysed catalog table)
+    from unified_ocr_pipeline_spark.sources.fixtures import write_pages_parquet
+
+    write_pages_parquet(str(tmp_path / "pages"), 24, seed=7)
+    read = spark.read.parquet(str(tmp_path / "pages"))
+    pages = spark.createDataFrame(read.rdd, read.schema)
+    res = ExtractionPipeline(spark, str(tmp_path / "out")).run(pages)
+    assert res.num_buckets == auto_num_buckets(spark)
+    assert res.num_buckets >= 4 * cores
 
 
 def test_range_join_no_nested_loop(spark):

@@ -136,6 +136,10 @@ def test_pipeline_run_preflight_gate(spark, tmp_path):
     with pytest.raises(PreflightError) as exc:
         pipe.run(str(tmp_path / "nope"))
     assert any("input unreadable" in p for p in exc.value.report["problems"])
+    # a DataFrame input (a micro-batch has no path) is checked the same way
+    with pytest.raises(PreflightError) as exc:
+        pipe.run(spark.read.parquet(bad))
+    assert any("input column url" in p for p in exc.value.report["problems"])
 
 
 # ---------------------------------------------------------------------------

@@ -77,6 +77,62 @@ def test_tick_job_count_flat_as_epochs_accumulate(spark, tmp_path):
     assert jobs[3] <= jobs[1], jobs
 
 
+def test_tick_is_a_plain_batch_run(spark, tmp_path):
+    """A tick hands its micro-batch DataFrame straight to the pipeline: no
+    empty-check job, no staged copy of the payloads and no re-read of it,
+    so a 300-doc tick runs at most 9 Spark jobs and nothing is written
+    under the checkpoint but the stream's own logs."""
+    from conftest import count_jobs
+
+    pages_dir = tmp_path / "pages"
+    pages_dir.mkdir()
+    ckpt = tmp_path / "ckpt"
+    pipe = ExtractionPipeline(spark, str(tmp_path / "out"))
+    rows = generate_pages_rows(2 * 300, seed=13)
+    jobs = []
+    for k in range(2):
+        _write_batch(pages_dir, rows[k * 300:(k + 1) * 300], f"t{k}")
+        n, j = count_jobs(
+            spark, lambda: run_available_now(spark, str(pages_dir), pipe, str(ckpt))
+        )
+        assert n == 1
+        jobs.append(j)
+    assert max(jobs) <= 9, jobs
+    assert sorted(d.name for d in ckpt.iterdir()) == ["source"]
+    urls = {r["url"] for r in pipe.read_extracted().select("url").collect()}
+    assert urls == {r["url"] for r in rows}
+
+
+def test_replayed_microbatch_leaves_one_lineage_row_set(spark, tmp_path):
+    """A crash after the run but before the stream committed the batch
+    replays the same micro-batch into the same epoch (resume=False): the
+    epoch's output and lineage are replaced, not added to."""
+    pages_dir = tmp_path / "pages"
+    pages_dir.mkdir()
+    ckpt = tmp_path / "ckpt"
+    pipe = ExtractionPipeline(spark, str(tmp_path / "out"), num_buckets=8, salt_factor=4)
+    rows = generate_pages_rows(80, seed=17)
+    _write_batch(pages_dir, rows, "b0")
+    assert run_available_now(spark, str(pages_dir), pipe, str(ckpt)) == 1
+
+    # the crash window: the run's output is durable, the commit is not
+    commits = ckpt / "source" / "commits"
+    for f in (commits / "0", commits / ".0.crc"):
+        if f.exists():
+            f.unlink()
+    assert run_available_now(spark, str(pages_dir), pipe, str(ckpt)) == 1
+
+    man = spark.read.parquet(pipe.manifest_path).where("epoch = 0")
+    met = spark.read.parquet(pipe.metrics_path).where("epoch = 0")
+    assert man.select("run_id").distinct().count() == 1
+    assert met.select("run_id").distinct().collect() == man.select("run_id").distinct().collect()
+    assert man.count() == man.select("bucket").distinct().count()
+    assert met.count() == met.select("bucket", "partition_id").distinct().count()
+    n_urls = len({r["url"] for r in rows})
+    assert pipe.read_extracted().count() == n_urls
+    assert man.agg({"row_count": "sum"}).first()[0] == n_urls
+
+
 def test_windowed_ingest_stats_with_watermark(spark, tmp_path):
     from unified_ocr_pipeline_spark.streaming.incremental import windowed_ingest_stats
 

@@ -13,17 +13,21 @@ Scale design (BASELINE.json north_rule / SURVEY.md §4):
   ``num_buckets=None`` each ``run`` sizes the bucket count to the bytes it
   reads (about one bucket per MiB, a salt multiple, capped at the
   cluster-sized ``auto_num_buckets``): a 300-doc cron tick writes a
-  handful of files and lineage rows, not 64 of each. The manifest records
-  the layout per epoch, so a resume replays it whatever the input size.
+  handful of files and lineage rows, not 64 of each. The layout is
+  resolved per run and returned in ``RunResult``; the manifest records it
+  per epoch, so a resume replays it whatever the input size or config.
 - **Checkpointed partition manifests (resume).** The unit of work is the
   bucket. A manifest row (bucket, row_count, content_hash, run_id,
   completed_at) is appended only AFTER that bucket's output is durably
-  written; a restart broadcast-anti-joins the input against completed
-  buckets (reference analog: existing-output duplicate check,
-  unified_ocr_pipeline.py:249-271 — SURVEY.md J2/X6) and, because the
-  output write uses dynamic partition overwrite, a bucket that crashed
+  written; a restart filters the input to the buckets missing from the
+  manifest with an IN-list (reference analog: existing-output duplicate
+  check, unified_ocr_pipeline.py:249-271 — SURVEY.md J2/X6), deletes
+  their output dirs and appends them afresh, so a bucket that crashed
   between write and manifest is simply rewritten — idempotent,
   exactly-once effect.
+- **One code path for batch and cron.** ``run`` takes a path, a
+  ``table:`` spec or a DataFrame; a cron tick passes its micro-batch
+  DataFrame straight in (``streaming/incremental.py``).
 - **Lineage metrics.** Per (bucket, partition_id): row counts, byte counts,
   status breakdown, stage wall time — aggregated from columns the
   extraction stage emits, no second pass over the data.
@@ -38,6 +42,7 @@ from __future__ import annotations
 import os
 import time
 import uuid
+from contextlib import contextmanager
 from dataclasses import dataclass
 from typing import Optional
 
@@ -45,7 +50,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..kernels import document as D
-from ..sources.tables import is_table_spec, read_input
+from ..sources.tables import read_input
 from .extraction import extract_stage, gate_oversize
 
 DEFAULT_NUM_BUCKETS = 64  # floor of the cluster-sized cap
@@ -106,6 +111,65 @@ def salted_bucket(df: DataFrame, num_buckets: int, salt_factor: int) -> DataFram
     )
 
 
+def _size_in_bytes(df: DataFrame) -> Optional[int]:
+    """The optimizer's byte-size estimate of ``df``: for a file scan, the
+    bytes its file index already listed (a path or a micro-batch alike).
+    None when the relation reports no size of its own, i.e. the session's
+    ``spark.sql.defaultSizeInBytes`` (an unanalysed catalog table)."""
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    unknown = df.sparkSession._jsparkSession.sessionState().conf().defaultSizeInBytes()
+    return None if size >= unknown else size
+
+
+@contextmanager
+def _input_splits(spark: SparkSession, size: Optional[int], per_core_splits: int = 2):
+    """Size parquet scan splits to the INPUT, not a constant, for the
+    duration of the block.
+
+    The extraction kernel runs on scan partitions (extract-before-
+    shuffle — raw payloads never enter an exchange), so scan split
+    count IS the extraction parallelism. Spark's own formula
+    (``bytesPerCore = total/defaultParallelism`` capped at
+    maxPartitionBytes) already yields ~1 split per core; this makes
+    the sizing explicit and targets ``per_core_splits ×`` cores
+    (finer tasks → stragglers rebalance instead of capping the
+    stage), clamped to [4 MB, 128 MB]. At 100 TB the clamp keeps the
+    production 128 MB splits (the executor-memory-bounding knob), so
+    the override only changes granularity when the input is small
+    relative to the cluster. Open-cost shrinks with the split so
+    many-tiny-file crawls don't pack files onto idle cores.
+
+    ``spark`` must be the session that plans the scan: a ``foreachBatch``
+    micro-batch runs on a clone of the session the stream was started
+    on, which does not see conf set on the original. ``size`` is the
+    input's byte size (None when unknown: the conf is left untouched).
+    The previous values are restored on exit."""
+    if not size:
+        yield
+        return
+    conf = spark.conf
+    target = max(1, per_core_splits * spark.sparkContext.defaultParallelism)
+    per = size // target + 1
+    per = max(4 * 1024 * 1024, min(128 * 1024 * 1024, per))
+    tuned = {
+        "spark.sql.files.maxPartitionBytes": per,
+        # open-cost must shrink with the split size or many-small-file
+        # inputs still pack whole files together (cost dominates size)
+        "spark.sql.files.openCostInBytes": max(64 * 1024, per // 8),
+    }
+    saved = {key: conf.get(key, None) for key in tuned}
+    for key, val in tuned.items():
+        conf.set(key, str(val))
+    try:
+        yield
+    finally:
+        for key, val in saved.items():
+            if val is None:
+                conf.unset(key)
+            else:
+                conf.set(key, val)
+
+
 @dataclass
 class RunResult:
     run_id: str
@@ -113,6 +177,9 @@ class RunResult:
     buckets_skipped: int
     rows_written: int
     wall_sec: float
+    # the bucket layout this run wrote (or, on a resume, adopted)
+    num_buckets: int
+    salt_factor: int
 
 
 class ExtractionPipeline:
@@ -131,92 +198,12 @@ class ExtractionPipeline:
         self.extracted_path = os.path.join(output_dir, "extracted")
         self.manifest_path = os.path.join(output_dir, "manifests")
         self.metrics_path = os.path.join(output_dir, "metrics")
-        # None → derive from cluster size so post-extraction parallelism
-        # scales with executors instead of a fixed 64-task ceiling; each
-        # run then shrinks it to its input (see auto_num_buckets)
-        self._size_buckets_to_input = num_buckets is None
-        self.num_buckets = (
-            num_buckets
-            if num_buckets is not None
-            else auto_num_buckets(spark, salt_factor)
-        )
+        # the configured layout; None → each run sizes the bucket count to
+        # its input and the cluster (auto_num_buckets). Runs never change
+        # these: a run's own layout is resolved by _layout.
+        self.num_buckets = num_buckets
         self.salt_factor = salt_factor
         self.max_bytes = max_bytes
-
-    # -- input split sizing ---------------------------------------------------
-    def _input_size_bytes(self, path: str) -> Optional[int]:
-        """Total byte size of a (possibly glob) input path via the Hadoop
-        FS — works on HDFS/S3A/local alike. None when unlistable (DSv2
-        table specs, permission quirks): the caller then leaves the
-        session's split config untouched."""
-        try:
-            sc = self.spark.sparkContext
-            jvm = sc._jvm
-            p = jvm.org.apache.hadoop.fs.Path(path)
-            fs = p.getFileSystem(sc._jsc.hadoopConfiguration())
-            statuses = fs.globStatus(p)
-            if statuses is None or len(statuses) == 0:
-                return None
-            total = 0
-            for st in statuses:
-                if st.isDirectory():
-                    it = fs.listFiles(st.getPath(), True)
-                    while it.hasNext():
-                        total += it.next().getLen()
-                else:
-                    total += st.getLen()
-            return total
-        except Exception:
-            return None
-
-    def _tune_input_splits(self, size: Optional[int], per_core_splits: int = 2):
-        """Size parquet scan splits to the INPUT, not a constant.
-
-        The extraction kernel runs on scan partitions (extract-before-
-        shuffle — raw payloads never enter an exchange), so scan split
-        count IS the extraction parallelism. Spark's own formula
-        (``bytesPerCore = total/defaultParallelism`` capped at
-        maxPartitionBytes) already yields ~1 split per core; this makes
-        the sizing explicit and targets ``per_core_splits ×`` cores
-        (finer tasks → stragglers rebalance instead of capping the
-        stage), clamped to [4 MB, 128 MB]. At 100 TB the clamp keeps the
-        production 128 MB splits (the executor-memory-bounding knob), so
-        the override only changes granularity when the input is small
-        relative to the cluster. Open-cost shrinks with the split so
-        many-tiny-file crawls don't pack files onto idle cores.
-
-        ``size`` is the input's byte size (None when unknown). Returns the
-        saved (maxPartitionBytes, openCostInBytes) pair so ``run`` can
-        restore the session state, or None when untouched.
-        """
-        if not size:
-            return None
-        conf = self.spark.conf
-        target = max(1, per_core_splits * self.spark.sparkContext.defaultParallelism)
-        per = size // target + 1
-        per = max(4 * 1024 * 1024, min(128 * 1024 * 1024, per))
-        saved = (
-            conf.get("spark.sql.files.maxPartitionBytes", None),
-            conf.get("spark.sql.files.openCostInBytes", None),
-        )
-        conf.set("spark.sql.files.maxPartitionBytes", str(per))
-        # open-cost must shrink with the split size or many-small-file
-        # inputs still pack whole files together (cost dominates size)
-        conf.set("spark.sql.files.openCostInBytes", str(max(64 * 1024, per // 8)))
-        return saved
-
-    def _restore_split_conf(self, saved) -> None:
-        if saved is None:
-            return
-        conf = self.spark.conf
-        for key, val in zip(
-            ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes"),
-            saved,
-        ):
-            if val is None:
-                conf.unset(key)
-            else:
-                conf.set(key, val)
 
     # -- manifests -----------------------------------------------------------
     def _read_manifest(self, epoch: int) -> list:
@@ -227,46 +214,39 @@ class ExtractionPipeline:
 
         Only ``manifests/epoch=E`` is listed, so the cost does not grow
         with the table's history, and the read schema is given, so no
-        inference job runs; rows from before the layout columns existed
-        read them as null. A manifest table without epoch dirs (rewritten
-        by other tooling) is read whole and filtered."""
-        fs, Path = self._fs(self.manifest_path)
-        root = Path(self.manifest_path)
-        if not fs.exists(root):
+        inference job runs."""
+        epoch_dir = f"{self.manifest_path}/epoch={epoch}"
+        fs, Path = self._fs(epoch_dir)
+        if not fs.exists(Path(epoch_dir)):
             return []
-        reader = self.spark.read.schema(
-            "bucket INT, num_buckets INT, salt_factor INT, epoch INT"
+        return (
+            self.spark.read.schema("bucket INT, num_buckets INT, salt_factor INT")
+            .parquet(epoch_dir)
+            .collect()
         )
-        epoch_dir = Path(f"{self.manifest_path}/epoch={epoch}")
-        if fs.exists(epoch_dir):
-            m = reader.parquet(epoch_dir.toString())
-        elif any(
-            st.getPath().getName().startswith("epoch=")
-            for st in fs.listStatus(root)
-        ):
-            return []  # partitioned table with nothing for this epoch yet
-        else:
-            m = reader.parquet(self.manifest_path).where(F.col("epoch") == epoch)
-        return m.select("bucket", "num_buckets", "salt_factor").collect()
 
-    def _adopt_epoch_bucketing(self, epoch: int, manifest_rows: list) -> None:
-        """Bucket ids belong to the EPOCH, not the cluster or the input: a
-        resume on a differently-sized cluster or input would re-derive a
-        different auto num_buckets, re-number every page's bucket, and the
-        manifest anti-join would then skip pages that were never processed
-        under the new numbering (silent loss). Manifest rows record the
-        (num_buckets, salt_factor) they were written with; a resuming run
-        adopts them. Rows from before these columns existed fall back to
-        the current config (documented caveat, pre-release tables only)."""
+    def _layout(self, epoch: int, manifest_rows: list, input_bytes: Optional[int]):
+        """This run's (num_buckets, salt_factor).
+
+        Bucket ids belong to the EPOCH, not the cluster, the input or the
+        pipeline's config: a resume that re-derived its own layout would
+        re-number every page's bucket, and the done-bucket filter would
+        then skip pages that were never processed under the new numbering
+        (silent loss). Manifest rows record the layout they were written
+        with; a resuming run adopts it. Otherwise the configured layout
+        applies, with ``num_buckets=None`` sized to the input bytes."""
         layouts = {(r["num_buckets"], r["salt_factor"]) for r in manifest_rows}
-        if not layouts or layouts == {(None, None)}:
-            return
         if len(layouts) > 1:
             raise ValueError(
                 f"manifest for epoch {epoch} records conflicting bucket "
                 f"configs {sorted(layouts, key=str)} — refusing to resume"
             )
-        self.num_buckets, self.salt_factor = layouts.pop()
+        if layouts:
+            return layouts.pop()
+        if self.num_buckets is not None:
+            return self.num_buckets, self.salt_factor
+        n = auto_num_buckets(self.spark, self.salt_factor, input_bytes=input_bytes)
+        return n, self.salt_factor
 
     def _clear_incomplete_buckets(self, epoch: int, done: set) -> None:
         """Delete output dirs of buckets NOT in the manifest for this epoch
@@ -310,65 +290,57 @@ class ExtractionPipeline:
     # -- the job ---------------------------------------------------------------
     def run(
         self,
-        pages_path: str,
+        pages: DataFrame | str,
         resume: bool = True,
         epoch: int = 0,
         preflight: bool = True,
     ) -> RunResult:
-        """Input-sized wrapper around :meth:`_run_impl` — the input is
-        listed once, scan splits are sized to it (extraction parallelism ==
-        scan splits, see ``_tune_input_splits``), an auto-sized pipeline
-        re-sizes its bucket count to it (``auto_num_buckets``; a resume
-        then adopts the epoch's recorded layout instead), and the session
-        split config is restored on every exit path."""
-        input_bytes = (
-            None if is_table_spec(pages_path) else self._input_size_bytes(pages_path)
-        )
-        if self._size_buckets_to_input:
-            self.num_buckets = auto_num_buckets(
-                self.spark, self.salt_factor, input_bytes=input_bytes
-            )
-        saved_split_conf = self._tune_input_splits(input_bytes)
-        try:
-            return self._run_impl(pages_path, resume, epoch, preflight)
-        finally:
-            self._restore_split_conf(saved_split_conf)
-
-    def _run_impl(
-        self,
-        pages_path: str,
-        resume: bool,
-        epoch: int,
-        preflight: bool,
-    ) -> RunResult:
         """Process one input (batch: epoch=0; incremental: one epoch per
-        micro-batch). Output partitions are (epoch, bucket): a replayed
-        micro-batch dynamically overwrites exactly its own partitions, so
-        at-least-once input delivery composes to exactly-once output.
+        micro-batch). ``pages`` is the pages DataFrame itself, a parquet
+        path/glob or a ``table:<name>`` spec (``sources/tables.py``).
+        Output partitions are (epoch, bucket): a replayed micro-batch
+        rewrites exactly its own partitions, so at-least-once input
+        delivery composes to exactly-once output.
 
         ``preflight`` (P8, reference :63-86): validate backends, kernel
         imports, and the input schema BEFORE submitting any work job —
         checked on the schema of the input DataFrame the run scans, so the
         input is inferred once; raises PreflightError with the full health
         report on a misconfigured cluster instead of a mid-job executor
-        trace."""
+        trace.
+
+        The input's byte size comes from its plan statistics (the file
+        index has listed it already): scan splits are sized to it for the
+        run (extraction parallelism == scan splits, see ``_input_splits``)
+        and an auto-sized pipeline sizes this run's bucket count to it."""
         from .preflight import require_healthy
 
         t0 = time.perf_counter()
+        path = pages if isinstance(pages, str) else None
+        if path is not None:
+            try:
+                pages = read_input(self.spark, path)
+            except Exception:
+                if preflight:
+                    # the full health report, "input unreadable" included
+                    require_healthy(self.spark, path)
+                raise
+        if preflight:
+            require_healthy(self.spark, path, input_df=pages)
+        input_bytes = _size_in_bytes(pages)
+        with _input_splits(pages.sparkSession, input_bytes):
+            return self._run_impl(pages, input_bytes, resume, epoch, t0)
+
+    def _run_impl(
+        self,
+        pages: DataFrame,
+        input_bytes: Optional[int],
+        resume: bool,
+        epoch: int,
+        t0: float,
+    ) -> RunResult:
         run_id = uuid.uuid4().hex[:12]
         spark = self.spark
-
-        # table:<name> specs resolve through the DSv2 catalog (Iceberg in
-        # production sessions); plain paths read parquet — sources/tables.py
-        try:
-            pages = read_input(spark, pages_path)
-        except Exception:
-            if preflight:
-                # the full health report, "input unreadable" included
-                require_healthy(spark, pages_path)
-            raise
-        if preflight:
-            require_healthy(spark, pages_path, input_df=pages)
 
         # a compact_epoch killed mid-swap leaves this epoch stashed under a
         # hidden dir Spark can't see; running on top of that state would
@@ -376,12 +348,12 @@ class ExtractionPipeline:
         # recover it BEFORE any read of the extracted table
         self._recover_compaction_stash(epoch)
         manifest_rows = self._read_manifest(epoch) if resume else []
-        self._adopt_epoch_bucketing(epoch, manifest_rows)
+        num_buckets, salt_factor = self._layout(epoch, manifest_rows, input_bytes)
         done = {r["bucket"] for r in manifest_rows}
         skipped = len(done)
 
         pages = with_host(pages)
-        pages = salted_bucket(pages, self.num_buckets, self.salt_factor)
+        pages = salted_bucket(pages, num_buckets, salt_factor)
         if done:
             # J2: anti-join against the checkpoint manifest as an IN-list
             # (≤ num_buckets literals) — completed buckets never reach the
@@ -398,7 +370,7 @@ class ExtractionPipeline:
         # schema-bearing part file, which a first-ever run could not then
         # re-read (AnalysisException) to build metrics.
         # every bucket done → nothing can survive the anti-join; skip the scan
-        if done >= set(range(self.num_buckets)) or pages.isEmpty():
+        if done >= set(range(num_buckets)) or pages.isEmpty():
             # still clear un-manifested partial dirs a crashed predecessor
             # may have left — same contract as the full path below
             self._clear_incomplete_buckets(epoch, done)
@@ -408,6 +380,8 @@ class ExtractionPipeline:
                 buckets_skipped=skipped,
                 rows_written=0,
                 wall_sec=time.perf_counter() - t0,
+                num_buckets=num_buckets,
+                salt_factor=salt_factor,
             )
 
         # EXTRACT BEFORE THE SHUFFLE (narrow, on scan partitions). Raw
@@ -421,7 +395,7 @@ class ExtractionPipeline:
         extracted = extract_stage(work, max_bytes=self.max_bytes)
 
         extracted = with_host(extracted)
-        extracted = salted_bucket(extracted, self.num_buckets, self.salt_factor)
+        extracted = salted_bucket(extracted, num_buckets, salt_factor)
         extracted = (
             extracted.drop("host")
             .withColumn("run_id", F.lit(run_id))
@@ -472,25 +446,14 @@ class ExtractionPipeline:
         # as columns), so the read-back does not grow with the number of
         # epochs ever written (columnar scan; extracted_text is hashed but
         # never fully re-materialized)
-        # An extracted table written by an older engine version may predate
-        # row_hash, and single-footer schema inference may then miss it.
-        # mergeSchema would handle that but reads EVERY part footer (one
-        # fixed job over ~num_buckets × tasks files per run — measurable
-        # drag on fast wide runs); instead read plain and, only in the
-        # legacy-mixed case, recompute the hash from the data columns.
         back = (
             spark.read.option("basePath", self.extracted_path)
             .parquet(f"{self.extracted_path}/epoch={epoch}")
             .where(F.col("run_id") == run_id)
-        )
-        if "row_hash" not in back.columns:
-            back = back.withColumn(
-                "row_hash",
-                F.xxhash64("url", F.coalesce("extracted_text", F.lit(""))),
+            .select(
+                "bucket", "partition_id", "raw_bytes", "total_text_length",
+                "total_images", "status", "proc_us", "warc_ts", "url", "row_hash",
             )
-        back = back.select(
-            "bucket", "partition_id", "raw_bytes", "total_text_length",
-            "total_images", "status", "proc_us", "warc_ts", "url", "row_hash",
         )
         per_bucket = back.groupBy("bucket", "partition_id").agg(
             F.count("*").alias("row_count"),
@@ -542,9 +505,9 @@ class ExtractionPipeline:
             .withColumn("epoch", F.lit(epoch))
             .withColumn("completed_at", F.current_timestamp())
             # record the bucket numbering these manifests were computed
-            # under — _adopt_epoch_bucketing replays it on resume
-            .withColumn("num_buckets", F.lit(self.num_buckets))
-            .withColumn("salt_factor", F.lit(self.salt_factor))
+            # under — _layout replays it on resume
+            .withColumn("num_buckets", F.lit(num_buckets))
+            .withColumn("salt_factor", F.lit(salt_factor))
         )
         # bucket/row totals observed while the manifest (one row per
         # bucket) is written — no extra action over the lineage
@@ -563,6 +526,8 @@ class ExtractionPipeline:
             buckets_skipped=skipped,
             rows_written=int(stats["rows"] or 0),
             wall_sec=time.perf_counter() - t0,
+            num_buckets=num_buckets,
+            salt_factor=salt_factor,
         )
 
     def read_extracted(self) -> DataFrame:

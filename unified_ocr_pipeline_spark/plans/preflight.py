@@ -50,10 +50,11 @@ def health_check(
 ) -> Dict[str, Any]:
     """Return the health report. ``status`` is 'healthy' only if a parse
     backend is available, every kernel module imports, every dependency is
-    present, and (when ``input_path`` is given) the input schema carries
-    all required columns at the expected types. ``input_df``, when given,
-    is ``input_path`` already read: its schema is checked instead of
-    reading the input again."""
+    present, and (when an input is given) the input schema carries all
+    required columns at the expected types. ``input_df``, when given, is
+    the input already read — ``input_path`` read, or a DataFrame with no
+    path at all (a micro-batch): its schema is checked instead of reading
+    the input again."""
     import importlib
 
     report: Dict[str, Any] = {
@@ -89,32 +90,30 @@ def health_check(
             report["dependencies"][dep] = "missing"
             report["problems"].append(f"dependency missing: {dep}")
 
-    if input_path is not None:
-        if spark is None:
-            report["problems"].append("input_path given but no SparkSession")
-        else:
-            inp: Dict[str, Any] = {"path": input_path, "columns": {}}
-            try:
-                # schema-only read: parquet footer / catalog metadata,
-                # no data scan (table: specs resolve via sources/tables)
-                from ..sources.tables import read_input
+    if input_df is not None or input_path is not None:
+        inp: Dict[str, Any] = {"path": input_path, "columns": {}}
+        try:
+            # schema-only read: parquet footer / catalog metadata,
+            # no data scan (table: specs resolve via sources/tables)
+            from ..sources.tables import read_input
 
-                if input_df is None:
-                    input_df = read_input(spark, input_path)
-                schema = input_df.schema
-                have = {f.name: f.dataType.simpleString() for f in schema.fields}
-                for col, want in REQUIRED_INPUT_COLUMNS.items():
-                    got = have.get(col)
-                    # timestamp_ntz is an acceptable carrier for warc_ts
-                    ok = got == want or (want == "timestamp" and got == "timestamp_ntz")
-                    inp["columns"][col] = got or "MISSING"
-                    if not ok:
-                        report["problems"].append(
-                            f"input column {col}: expected {want}, got {got}"
-                        )
-            except Exception as exc:  # noqa: BLE001
-                report["problems"].append(f"input unreadable: {input_path}: {exc}")
-            report["input"] = inp
+            if input_df is None:
+                if spark is None:
+                    raise ValueError("no SparkSession to read it with")
+                input_df = read_input(spark, input_path)
+            have = {f.name: f.dataType.simpleString() for f in input_df.schema.fields}
+            for col, want in REQUIRED_INPUT_COLUMNS.items():
+                got = have.get(col)
+                # timestamp_ntz is an acceptable carrier for warc_ts
+                ok = got == want or (want == "timestamp" and got == "timestamp_ntz")
+                inp["columns"][col] = got or "MISSING"
+                if not ok:
+                    report["problems"].append(
+                        f"input column {col}: expected {want}, got {got}"
+                    )
+        except Exception as exc:  # noqa: BLE001
+            report["problems"].append(f"input unreadable: {input_path}: {exc}")
+        report["input"] = inp
 
     report["status"] = "healthy" if not report["problems"] else "unhealthy"
     return report

@@ -6,13 +6,16 @@ minutes, scan the incoming dir, process new files, never reprocess
 files retried next tick :1182-1185).
 
 Spark mapping: ``readStream`` file source + ``Trigger.AvailableNow`` +
-``foreachBatch`` running the SAME batch pipeline per micro-batch. Spark's
-file-source checkpoint (source offsets) provides the never-reprocess-a-file
-guarantee; the pipeline's bucket manifests stay authoritative for
-exactly-once OUTPUT effects, so the two checkpoints compose: a crashed
-micro-batch replays its files, and already-manifested buckets are skipped
-by the anti-join (at-least-once input × idempotent output = exactly-once
-effect — same argument as the reference's existing-output check).
+``foreachBatch`` handing each micro-batch DataFrame straight to the SAME
+batch pipeline — a tick is a plain batch run over the new files, with no
+staged copy of their payloads. Spark's file-source checkpoint (source
+offsets) provides the never-reprocess-a-file guarantee; the pipeline's
+bucket manifests stay authoritative for exactly-once OUTPUT effects, so
+the two checkpoints compose: a crashed micro-batch replays its files into
+the same epoch, and the run rewrites that epoch's buckets and lineage rows
+instead of adding to them (at-least-once input × idempotent output =
+exactly-once effect — same argument as the reference's existing-output
+check).
 
 ``Trigger.AvailableNow`` processes everything present then stops — exactly
 the reference's one-shot cron tick, minus the shell wrapper.
@@ -60,23 +63,15 @@ def run_available_now(
     n_batches = {"n": 0}
 
     def _process(batch_df, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         n_batches["n"] += 1
-        # micro-batch rows → temp parquet → the batch pipeline. A replayed
+        # the micro-batch IS the run's input: its plan statistics size the
+        # run and its empty case is the run's own short-circuit. A replayed
         # batch (crash after run, before the stream checkpoint committed)
         # is idempotent because resume=False makes the run own its epoch:
         # the epoch's bucket dirs are cleared and rewritten, and the
         # lineage (metrics/manifest) writes dynamically overwrite that
         # epoch's partition instead of appending a duplicate row set.
-        staging = f"{checkpoint_dir}/staging/epoch={epoch_id}"
-        batch_df.write.mode("overwrite").parquet(staging)
-        pipeline.run(staging, resume=False, epoch=int(epoch_id))
-        # the staged copy of the raw input (html payloads included) has
-        # served its purpose — without this, long-running ingest
-        # accumulates a second full copy of the crawl under staging/
-        fs, Path = pipeline._fs(staging)
-        fs.delete(Path(staging), True)
+        pipeline.run(batch_df, resume=False, epoch=int(epoch_id))
 
     q = (
         stream.writeStream.foreachBatch(_process)
