@@ -2,6 +2,7 @@
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from unified_ocr_pipeline_spark.operators import featurize as FZ
@@ -211,6 +212,10 @@ def test_lang_lr_train_drops_null_labels(spark):
     W = FZ.lang_lr_train(with_nulls, dim=8, iters=2)
     assert set(W) == {"aa", "xx", "mm"}
     assert W == FZ.lang_lr_train(df, dim=8, iters=2)  # null row inert
+    # no labeled row at all: a clear error, on the codegen route too
+    all_null = df.withColumn("lang", F.lit(None).cast("string"))
+    with pytest.raises(ValueError, match="no labeled rows"):
+        FZ.lang_lr_train(all_null, dim=8, iters=2, vectorized=False)
 
 
 def test_lang_lr_train_vectorized_bitcompares_with_codegen(spark):
@@ -270,8 +275,6 @@ def test_lang_id_strategy_routing(spark):
     # ONE contract, selectable engines (the U3 seam): both strategies
     # label every input row; trained recovers the planted separation,
     # heuristic falls back to stopword evidence; unknown strategy raises
-    import pytest
-
     df = _lang_corpus(spark)
     W = FZ.lang_lr_train(df, dim=16, iters=8, lr=2.0)
     trained = FZ.lang_id(df, strategy="trained", weights=W, dim=16)

@@ -302,10 +302,13 @@ def _written_buckets(pipe, epoch=0):
 def test_run_on_dataframe_equals_run_on_path(spark, pages_path, golden, tmp_path):
     """A DataFrame input (what a cron tick passes) and the path it was read
     from are the same run: same bucket layout, same per-url text, same
-    manifest."""
+    manifest. The path run, a fresh auto-sized run over a multi-file
+    input like a benchmark batch run, also stays within its job budget."""
+    from conftest import count_jobs
+
     def outcome(pages, out):
         pipe = ExtractionPipeline(spark, str(tmp_path / out), max_bytes=MAX_BYTES)
-        res = pipe.run(pages)
+        res, jobs = count_jobs(spark, lambda: pipe.run(pages))
         text = {
             r["url"]: r["extracted_text"]
             for r in pipe.read_extracted().select("url", "extracted_text").collect()
@@ -314,12 +317,55 @@ def test_run_on_dataframe_equals_run_on_path(spark, pages_path, golden, tmp_path
             (r["bucket"], r["row_count"], r["content_hash"])
             for r in spark.read.parquet(pipe.manifest_path).collect()
         }
-        return (res.num_buckets, res.salt_factor), text, manifest
+        return ((res.num_buckets, res.salt_factor), text, manifest), jobs
 
-    by_path = outcome(pages_path, "path")
-    by_df = outcome(spark.read.parquet(pages_path), "df")
+    by_path, path_jobs = outcome(pages_path, "path")
+    by_df, _ = outcome(spark.read.parquet(pages_path), "df")
     assert by_df == by_path
     assert set(by_df[1]) == set(golden)
+    assert path_jobs <= 10, path_jobs
+
+
+def test_run_leaves_scan_split_sizing_to_spark(spark, tmp_path, monkeypatch):
+    """run() sets no split conf: the extraction stage sees the session's
+    own split settings and scans the input as a plain read of it would.
+    The input is one ~1.5 MB row group of incompressible payloads."""
+    from datetime import datetime, timezone
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from unified_ocr_pipeline_spark.sources.fixtures import PAGES_ARROW_SCHEMA
+
+    keys = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+    rows = [
+        {
+            "url": f"https://example.com/{i}",
+            "warc_ts": datetime(2024, 1, 1, tzinfo=timezone.utc),
+            "html": os.urandom(32 * 1024),  # incompressible
+            "text": None,
+            "lang": None,
+        }
+        for i in range(48)
+    ]
+    path = str(tmp_path / "one.parquet")
+    pq.write_table(
+        pa.Table.from_pylist(rows, schema=PAGES_ARROW_SCHEMA), path, row_group_size=len(rows)
+    )
+    assert pq.ParquetFile(path).num_row_groups == 1
+
+    seen = []
+    extract_stage = pipeline_mod.extract_stage
+
+    def recording(df, **kw):
+        conf = df.sparkSession.conf
+        seen.append((*(conf.get(k) for k in keys), df.rdd.getNumPartitions()))
+        return extract_stage(df, **kw)
+
+    monkeypatch.setattr(pipeline_mod, "extract_stage", recording)
+    ExtractionPipeline(spark, str(tmp_path / "out"), max_bytes=MAX_BYTES).run(path)
+    plain = (*(spark.conf.get(k) for k in keys), spark.read.parquet(path).rdd.getNumPartitions())
+    assert seen == [plain]
 
 
 def test_resumed_layout_does_not_stick_to_pipeline(spark, pages_path, tiny_pages_path, tmp_path):

@@ -315,6 +315,8 @@ def lang_lr_train(
         classes = sorted(
             r["_y"] for r in feat.select("_y").distinct().collect()
         )
+        if not classes:
+            raise ValueError("no labeled rows to train on")
         if vectorized is None:
             vectorized = len(classes) * (dim + 1) > vectorized_threshold
         fnames = ["bias"] + [f"e{j}" for j in range(dim)]
@@ -421,8 +423,6 @@ def _softmax_grad_avg_vec(
             lambda acc, x: F.zip_with(acc, x, lambda a, b: a + b),
         ).alias("g"),
     ).first()
-    if not row["n"]:
-        raise ValueError("lang_lr_train: no labeled rows to train on")
     g = np.array(row["g"], dtype=np.float64).reshape(n_classes, dim + 1)
     return (g / float(row["n"])).tolist()
 

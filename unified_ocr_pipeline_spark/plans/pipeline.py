@@ -42,7 +42,6 @@ from __future__ import annotations
 import os
 import time
 import uuid
-from contextlib import contextmanager
 from dataclasses import dataclass
 from typing import Optional
 
@@ -121,55 +120,6 @@ def _size_in_bytes(df: DataFrame) -> Optional[int]:
     return None if size >= unknown else size
 
 
-@contextmanager
-def _input_splits(spark: SparkSession, size: Optional[int], per_core_splits: int = 2):
-    """Size parquet scan splits to the INPUT, not a constant, for the
-    duration of the block.
-
-    The extraction kernel runs on scan partitions (extract-before-
-    shuffle — raw payloads never enter an exchange), so scan split
-    count IS the extraction parallelism. Spark's own formula
-    (``bytesPerCore = total/defaultParallelism`` capped at
-    maxPartitionBytes) already yields ~1 split per core; this makes
-    the sizing explicit and targets ``per_core_splits ×`` cores
-    (finer tasks → stragglers rebalance instead of capping the
-    stage), clamped to [4 MB, 128 MB]. At 100 TB the clamp keeps the
-    production 128 MB splits (the executor-memory-bounding knob), so
-    the override only changes granularity when the input is small
-    relative to the cluster. Open-cost shrinks with the split so
-    many-tiny-file crawls don't pack files onto idle cores.
-
-    ``spark`` must be the session that plans the scan: a ``foreachBatch``
-    micro-batch runs on a clone of the session the stream was started
-    on, which does not see conf set on the original. ``size`` is the
-    input's byte size (None when unknown: the conf is left untouched).
-    The previous values are restored on exit."""
-    if not size:
-        yield
-        return
-    conf = spark.conf
-    target = max(1, per_core_splits * spark.sparkContext.defaultParallelism)
-    per = size // target + 1
-    per = max(4 * 1024 * 1024, min(128 * 1024 * 1024, per))
-    tuned = {
-        "spark.sql.files.maxPartitionBytes": per,
-        # open-cost must shrink with the split size or many-small-file
-        # inputs still pack whole files together (cost dominates size)
-        "spark.sql.files.openCostInBytes": max(64 * 1024, per // 8),
-    }
-    saved = {key: conf.get(key, None) for key in tuned}
-    for key, val in tuned.items():
-        conf.set(key, str(val))
-    try:
-        yield
-    finally:
-        for key, val in saved.items():
-            if val is None:
-                conf.unset(key)
-            else:
-                conf.set(key, val)
-
-
 @dataclass
 class RunResult:
     run_id: str
@@ -225,7 +175,7 @@ class ExtractionPipeline:
             .collect()
         )
 
-    def _layout(self, epoch: int, manifest_rows: list, input_bytes: Optional[int]):
+    def _layout(self, epoch: int, manifest_rows: list, pages: DataFrame):
         """This run's (num_buckets, salt_factor).
 
         Bucket ids belong to the EPOCH, not the cluster, the input or the
@@ -234,7 +184,8 @@ class ExtractionPipeline:
         then skip pages that were never processed under the new numbering
         (silent loss). Manifest rows record the layout they were written
         with; a resuming run adopts it. Otherwise the configured layout
-        applies, with ``num_buckets=None`` sized to the input bytes."""
+        applies, with ``num_buckets=None`` sized to the input's bytes
+        (``_size_in_bytes``)."""
         layouts = {(r["num_buckets"], r["salt_factor"]) for r in manifest_rows}
         if len(layouts) > 1:
             raise ValueError(
@@ -245,7 +196,9 @@ class ExtractionPipeline:
             return layouts.pop()
         if self.num_buckets is not None:
             return self.num_buckets, self.salt_factor
-        n = auto_num_buckets(self.spark, self.salt_factor, input_bytes=input_bytes)
+        n = auto_num_buckets(
+            self.spark, self.salt_factor, input_bytes=_size_in_bytes(pages)
+        )
         return n, self.salt_factor
 
     def _clear_incomplete_buckets(self, epoch: int, done: set) -> None:
@@ -258,13 +211,9 @@ class ExtractionPipeline:
         serial round-trips even on a fresh-ish store); with auto-sized
         buckets on S3 that's minutes of driver time for a usually-empty
         result."""
-        spark = self.spark
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        epoch_path = jvm.org.apache.hadoop.fs.Path(
-            f"{self.extracted_path}/epoch={epoch}"
-        )
-        fs = epoch_path.getFileSystem(conf)
+        epoch_dir = f"{self.extracted_path}/epoch={epoch}"
+        fs, Path = self._fs(epoch_dir)
+        epoch_path = Path(epoch_dir)
         if not fs.exists(epoch_path):
             return  # fresh run/epoch: nothing to clear
         to_delete = []
@@ -309,10 +258,11 @@ class ExtractionPipeline:
         report on a misconfigured cluster instead of a mid-job executor
         trace.
 
-        The input's byte size comes from its plan statistics (the file
-        index has listed it already): scan splits are sized to it for the
-        run (extraction parallelism == scan splits, see ``_input_splits``)
-        and an auto-sized pipeline sizes this run's bucket count to it."""
+        Extraction runs on the scan's own splits, sized by Spark's file-split
+        formula under the session's ``spark.sql.files.maxPartitionBytes``
+        ceiling; ``run`` sets no session conf. An auto-sized pipeline sizes
+        this run's bucket count to the input's plan statistics (the file
+        index has listed it already)."""
         from .preflight import require_healthy
 
         t0 = time.perf_counter()
@@ -327,18 +277,6 @@ class ExtractionPipeline:
                 raise
         if preflight:
             require_healthy(self.spark, path, input_df=pages)
-        input_bytes = _size_in_bytes(pages)
-        with _input_splits(pages.sparkSession, input_bytes):
-            return self._run_impl(pages, input_bytes, resume, epoch, t0)
-
-    def _run_impl(
-        self,
-        pages: DataFrame,
-        input_bytes: Optional[int],
-        resume: bool,
-        epoch: int,
-        t0: float,
-    ) -> RunResult:
         run_id = uuid.uuid4().hex[:12]
         spark = self.spark
 
@@ -348,7 +286,7 @@ class ExtractionPipeline:
         # recover it BEFORE any read of the extracted table
         self._recover_compaction_stash(epoch)
         manifest_rows = self._read_manifest(epoch) if resume else []
-        num_buckets, salt_factor = self._layout(epoch, manifest_rows, input_bytes)
+        num_buckets, salt_factor = self._layout(epoch, manifest_rows, pages)
         done = {r["bucket"] for r in manifest_rows}
         skipped = len(done)
 

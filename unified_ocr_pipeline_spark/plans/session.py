@@ -36,7 +36,10 @@ def get_spark(
         # extraction stage (one crossing per batch, not per page)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
         .config("spark.sql.session.timeZone", "UTC")
-        # parquet input split sizing — at 100 TB this bounds task input so a
+        # the only scan-split setting, and a ceiling: below it Spark sizes
+        # splits to the input (min(this, max(openCost, bytes / cores))), so
+        # the extraction stage, which runs on the scan's splits, spreads a
+        # small input over the cores. At 100 TB it bounds task input so a
         # partition's documents fit executor memory (SURVEY.md §4 X9)
         .config("spark.sql.files.maxPartitionBytes", "128m")
         # the vectorized reader's default 4096-row batch is sized for narrow
