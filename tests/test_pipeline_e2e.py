@@ -106,16 +106,25 @@ def test_statuses_cover_quarantine_classes(run_output):
 
 
 def test_metrics_and_manifest_written(run_output, spark):
+    """Lineage is one metrics row per input partition and one manifest row
+    per bucket, and both account for every row written."""
     pipe, result = run_output
     m = spark.read.parquet(pipe.metrics_path)
-    assert m.where(m.run_id == result.run_id).count() > 0
-    cols = set(m.columns)
-    assert {"bucket", "partition_id", "row_count", "stage_proc_us",
-            "content_hash", "ok_rows", "quarantined_rows"} <= cols
+    m = m.where(m.run_id == result.run_id)
+    assert m.count() > 0
+    assert m.count() == m.select("partition_id").distinct().count()
+    assert {"partition_id", "row_count", "stage_proc_us",
+            "ok_rows", "quarantined_rows"} <= set(m.columns)
     # A2: images aggregate in the lineage metrics
     assert m.agg({"total_images": "sum"}).first()[0] > 0
     man = spark.read.parquet(pipe.manifest_path)
+    assert {"bucket", "content_hash"} <= set(man.columns)
     assert man.select("bucket").distinct().count() == result.buckets_processed
+    assert (
+        m.agg({"row_count": "sum"}).first()[0]
+        == man.agg({"row_count": "sum"}).first()[0]
+        == result.rows_written
+    )
 
 
 def test_salted_buckets_spread_heavy_host(run_output, spark):
@@ -323,7 +332,26 @@ def test_run_on_dataframe_equals_run_on_path(spark, pages_path, golden, tmp_path
     by_df, _ = outcome(spark.read.parquet(pages_path), "df")
     assert by_df == by_path
     assert set(by_df[1]) == set(golden)
-    assert path_jobs <= 10, path_jobs
+    assert path_jobs <= 7, path_jobs
+
+
+def test_empty_input_writes_no_lineage(spark, pages_path, golden, tmp_path):
+    """A run over an empty DataFrame writes no rows and no lineage, and a
+    later run into the same epoch is a normal first run."""
+    pipe = ExtractionPipeline(spark, str(tmp_path / "out"), max_bytes=MAX_BYTES)
+    empty = pipe.run(spark.read.parquet(pages_path).where("false"))
+    assert (empty.rows_written, empty.buckets_processed) == (0, 0)
+    assert not os.path.exists(pipe.metrics_path)
+    assert not os.path.exists(pipe.manifest_path)
+
+    res = pipe.run(pages_path)
+    assert res.buckets_skipped == 0 and res.rows_written == len(golden)
+    got = {
+        r["url"]: r["extracted_text"]
+        for r in pipe.read_extracted().select("url", "extracted_text").collect()
+    }
+    assert set(got) == set(golden)
+    assert all(got[u] == g.extracted_text for u, g in golden.items())
 
 
 def test_run_leaves_scan_split_sizing_to_spark(spark, tmp_path, monkeypatch):

@@ -28,9 +28,9 @@ Scale design (BASELINE.json north_rule / SURVEY.md §4):
 - **One code path for batch and cron.** ``run`` takes a path, a
   ``table:`` spec or a DataFrame; a cron tick passes its micro-batch
   DataFrame straight in (``streaming/incremental.py``).
-- **Lineage metrics.** Per (bucket, partition_id): row counts, byte counts,
-  status breakdown, stage wall time — aggregated from columns the
-  extraction stage emits, no second pass over the data.
+- **Lineage metrics.** Per input partition (the manifest: per bucket): row
+  counts, byte counts, status breakdown, stage wall time — aggregated from
+  columns the extraction stage emits, no second pass over the data.
 - **Exact dedup by url** (latest crawl wins) inside the single bucket
   exchange: the window that lays rows out for the bucketed write also
   sorts (url, warc_ts desc), so a lag-based first-row filter dedups with
@@ -56,6 +56,12 @@ DEFAULT_NUM_BUCKETS = 64  # floor of the cluster-sized cap
 DEFAULT_SALT_FACTOR = 8
 # input bytes per bucket when num_buckets is sized to the input
 _BYTES_PER_BUCKET = 1 << 20
+# the extracted table's light columns that the lineage is aggregated from;
+# reading them back with this schema runs no inference job
+_LINEAGE_SCHEMA = (
+    "bucket INT, partition_id INT, run_id STRING, raw_bytes BIGINT, total_text_length BIGINT, "
+    "total_images INT, status STRING, proc_us BIGINT, warc_ts TIMESTAMP, row_hash BIGINT"
+)
 
 
 def auto_num_buckets(
@@ -303,24 +309,17 @@ class ExtractionPipeline:
         # bytes the kernel would discard.
         pages = gate_oversize(pages, self.max_bytes)
 
-        # P9 empty-batch short-circuit — also guards the read-back below:
-        # a partitioned append of 0 rows creates an extracted dir with no
-        # schema-bearing part file, which a first-ever run could not then
-        # re-read (AnalysisException) to build metrics.
+        def result(buckets_processed: int = 0, rows_written: int = 0) -> RunResult:
+            wall_sec = time.perf_counter() - t0
+            return RunResult(run_id, buckets_processed, skipped, rows_written,
+                             wall_sec, num_buckets, salt_factor)
+
         # every bucket done → nothing can survive the anti-join; skip the scan
-        if done >= set(range(num_buckets)) or pages.isEmpty():
+        if done >= set(range(num_buckets)):
             # still clear un-manifested partial dirs a crashed predecessor
             # may have left — same contract as the full path below
             self._clear_incomplete_buckets(epoch, done)
-            return RunResult(
-                run_id=run_id,
-                buckets_processed=0,
-                buckets_skipped=skipped,
-                rows_written=0,
-                wall_sec=time.perf_counter() - t0,
-                num_buckets=num_buckets,
-                salt_factor=salt_factor,
-            )
+            return result()
 
         # EXTRACT BEFORE THE SHUFFLE (narrow, on scan partitions). Raw
         # payloads never enter an exchange: shuffling binary blobs and then
@@ -365,6 +364,10 @@ class ExtractionPipeline:
             "row_hash", F.xxhash64("url", F.coalesce("extracted_text", F.lit("")))
         )
 
+        # rows counted on the data write itself: no empty-check job
+        written = Observation(f"written_{run_id}")
+        extracted = extracted.observe(written, F.count("*").alias("rows"))
+
         # Idempotent per-(epoch, bucket) rewrite WITHOUT dynamic partition
         # overwrite: the to-do bucket list is known on the driver, so their
         # dirs are deleted up front (Hadoop FS — works on HDFS/S3A/local)
@@ -378,6 +381,9 @@ class ExtractionPipeline:
             .partitionBy("epoch", "bucket")
             .parquet(self.extracted_path)
         )
+        rows_written = written.get["rows"]
+        if rows_written == 0:  # no lineage, and no epoch dir to read back
+            return result()
 
         # read back ONLY the light columns to build manifests + metrics —
         # only this epoch's dir is listed (basePath keeps epoch and bucket
@@ -385,15 +391,12 @@ class ExtractionPipeline:
         # epochs ever written (columnar scan; extracted_text is hashed but
         # never fully re-materialized)
         back = (
-            spark.read.option("basePath", self.extracted_path)
+            spark.read.schema(_LINEAGE_SCHEMA)
+            .option("basePath", self.extracted_path)
             .parquet(f"{self.extracted_path}/epoch={epoch}")
             .where(F.col("run_id") == run_id)
-            .select(
-                "bucket", "partition_id", "raw_bytes", "total_text_length",
-                "total_images", "status", "proc_us", "warc_ts", "url", "row_hash",
-            )
         )
-        per_bucket = back.groupBy("bucket", "partition_id").agg(
+        per_partition = back.groupBy("partition_id").agg(
             F.count("*").alias("row_count"),
             F.sum("raw_bytes").alias("input_bytes"),
             F.sum("total_text_length").alias("extracted_chars"),
@@ -405,21 +408,12 @@ class ExtractionPipeline:
             F.sum("proc_us").alias("stage_proc_us"),
             F.min("warc_ts").alias("first_ts"),
             F.max("warc_ts").alias("last_ts"),
-            # order-insensitive content hash over (url, extracted_text)
-            # via the precomputed row_hash: the resume test's "outputs
-            # identical" witness. bit_xor (not sum) — commutative and
-            # immune to ANSI bigint overflow.
-            F.expr("bit_xor(row_hash)").alias("content_hash"),
         )
         metrics = (
-            per_bucket.withColumn("run_id", F.lit(run_id))
+            per_partition.withColumn("run_id", F.lit(run_id))
             .withColumn("epoch", F.lit(epoch))
             .withColumn("completed_at", F.current_timestamp())
         )
-        # the manifest below derives from this same aggregation — persist so
-        # the read-back scan+agg runs once, not once per dependent write
-        # (measured ~40% of the non-scaling per-run overhead)
-        metrics = metrics.persist()
         # resume=False means THIS run owns the whole epoch (fresh run or a
         # replayed micro-batch): dynamic partition overwrite replaces
         # exactly this epoch's metrics/manifest rows, so a replay leaves
@@ -432,12 +426,14 @@ class ExtractionPipeline:
         )
 
         manifest = (
-            metrics.groupBy("bucket")
+            back.groupBy("bucket")
             .agg(
-                F.sum("row_count").alias("row_count"),
-                # xor of per-partition xors == xor over all rows; sum would
-                # overflow ANSI bigint on full-range hash values
-                F.expr("bit_xor(content_hash)").alias("content_hash"),
+                F.count("*").alias("row_count"),
+                # order-insensitive content hash over (url, extracted_text)
+                # via the precomputed row_hash: the resume test's "outputs
+                # identical" witness. bit_xor (not sum) — commutative and
+                # immune to ANSI bigint overflow.
+                F.expr("bit_xor(row_hash)").alias("content_hash"),
             )
             .withColumn("run_id", F.lit(run_id))
             .withColumn("epoch", F.lit(epoch))
@@ -447,26 +443,14 @@ class ExtractionPipeline:
             .withColumn("num_buckets", F.lit(num_buckets))
             .withColumn("salt_factor", F.lit(salt_factor))
         )
-        # bucket/row totals observed while the manifest (one row per
-        # bucket) is written — no extra action over the lineage
+        # buckets counted while the manifest (one row per bucket) is
+        # written — no extra action over the lineage
         totals = Observation(f"totals_{run_id}")
-        manifest = manifest.observe(
-            totals, F.count("*").alias("buckets"), F.sum("row_count").alias("rows")
-        )
+        manifest = manifest.observe(totals, F.count("*").alias("buckets"))
         manifest.write.mode(lineage_mode).partitionBy("epoch").parquet(
             self.manifest_path
         )
-        metrics.unpersist()
-        stats = totals.get
-        return RunResult(
-            run_id=run_id,
-            buckets_processed=int(stats["buckets"] or 0),
-            buckets_skipped=skipped,
-            rows_written=int(stats["rows"] or 0),
-            wall_sec=time.perf_counter() - t0,
-            num_buckets=num_buckets,
-            salt_factor=salt_factor,
-        )
+        return result(totals.get["buckets"], rows_written)
 
     def read_extracted(self) -> DataFrame:
         return self.spark.read.parquet(self.extracted_path)
