@@ -71,3 +71,14 @@ def count_jobs(spark, fn):
     result = fn()
     after = marker()
     return result, after - before - 1
+
+
+def files_per_bucket(extracted_path):
+    """``{bucket dir: number of .parquet files in it}`` over every epoch
+    of an extracted table."""
+    import glob
+
+    return {
+        d: len(glob.glob(os.path.join(d, "*.parquet")))
+        for d in glob.glob(os.path.join(extracted_path, "epoch=*", "bucket=*"))
+    }

@@ -173,18 +173,26 @@ def test_resume_of_complete_epoch_job_budget(spark, pages_path, tmp_path):
     assert jobs <= 2, jobs
 
 
-def test_partial_manifest_resume(spark, pages_path, golden, tmp_path_factory):
-    """Kill-after-partition-k simulation: pre-write manifests for a subset of
+@pytest.mark.parametrize("kept", ["every_other", "none"])
+def test_partial_manifest_resume(spark, pages_path, golden, tmp_path_factory, kept):
+    """Kill-after-partition-k simulation: keep manifests for a subset of
     buckets, run with resume, assert only the missing buckets are processed
-    and the union equals the full golden set."""
+    and the union equals the full golden set. Keeping none is the state a
+    crash between the metrics and the manifest write leaves. Either way the
+    resumed epoch's lineage counts every row once, and every bucket is
+    still one file."""
+    from conftest import files_per_bucket
+    from pyspark.sql import functions as F
+
     out = str(tmp_path_factory.mktemp("out2") / "run")
     pipe = ExtractionPipeline(spark, out, num_buckets=16, salt_factor=4, max_bytes=MAX_BYTES)
     full = pipe.run(pages_path)  # baseline full run
 
-    # simulate a killed job: drop manifests for half the buckets and delete
-    # their output, as if the job died before completing them
+    # simulate a killed job: drop manifests for some of the buckets, as if
+    # the job died before completing them
     man = spark.read.parquet(pipe.manifest_path)
-    keep_buckets = [r["bucket"] for r in man.select("bucket").distinct().collect()][::2]
+    buckets = [r["bucket"] for r in man.select("bucket").distinct().collect()]
+    keep_buckets = buckets[::2] if kept == "every_other" else []
     import shutil
 
     man.where(man.bucket.isin(keep_buckets)).write.mode("overwrite").partitionBy(
@@ -203,6 +211,46 @@ def test_partial_manifest_resume(spark, pages_path, golden, tmp_path_factory):
     }
     assert set(got) == set(golden)
     assert all(got[u] == g.extracted_text for u, g in golden.items())
+
+    met = spark.read.parquet(pipe.metrics_path).where("epoch = 0")
+    man = spark.read.parquet(pipe.manifest_path).where("epoch = 0")
+    assert man.count() == man.select("bucket").distinct().count() == full.buckets_processed
+    assert (
+        met.agg(F.sum("row_count")).first()[0]
+        == man.agg(F.sum("row_count")).first()[0]
+        == len(golden)
+    )
+    assert set(files_per_bucket(pipe.extracted_path).values()) == {1}
+
+
+def test_rerun_under_static_overwrite_mode_keeps_other_epochs_lineage(
+    spark, tiny_pages_path, tmp_path
+):
+    """The lineage writes replace only their own epoch even in a session
+    whose partitionOverwriteMode is static: a resume=False rerun of epoch 1
+    leaves epoch 0's metrics and manifest rows as they were."""
+    pipe = ExtractionPipeline(
+        spark, str(tmp_path / "out"), num_buckets=8, salt_factor=4, max_bytes=MAX_BYTES
+    )
+    pipe.run(tiny_pages_path, epoch=0)
+    pipe.run(tiny_pages_path, epoch=1)
+
+    def epoch0_lineage():
+        return [
+            set(spark.read.parquet(path).where("epoch = 0").collect())
+            for path in (pipe.metrics_path, pipe.manifest_path)
+        ]
+
+    before = epoch0_lineage()
+    key = "spark.sql.sources.partitionOverwriteMode"
+    mode = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        pipe.run(tiny_pages_path, resume=False, epoch=1)
+    finally:
+        spark.conf.set(key, mode)
+    assert all(before)
+    assert epoch0_lineage() == before
 
 
 def test_compact_epoch_preserves_content(spark, pages_path, tmp_path_factory):
@@ -234,29 +282,6 @@ def test_compact_epoch_preserves_content(spark, pages_path, tmp_path_factory):
     # manifests still valid → a resumed run skips every bucket
     res = pipe.run(pages_path)
     assert res.buckets_processed == 0 and res.buckets_skipped == len(after)
-
-
-def test_compact_epoch_recovers_stranded_stash(spark, pages_path, tmp_path_factory):
-    """Simulate a crash between the two swap renames (epoch only present
-    as the hidden .old stash): the next compact_epoch must restore and
-    recompact instead of reporting an empty epoch."""
-    import os
-    from pyspark.sql import functions as F
-
-    out = str(tmp_path_factory.mktemp("out") / "crash")
-    pipe = ExtractionPipeline(
-        spark, out, num_buckets=16, salt_factor=4, max_bytes=MAX_BYTES
-    )
-    pipe.run(pages_path)
-    before = pipe.read_extracted().where(F.col("epoch") == 0).count()
-
-    src = f"{out}/extracted/epoch=0"
-    os.rename(src, f"{out}/extracted/.old_epoch=0")   # the crash window
-    n_files = pipe.compact_epoch(0)
-    assert n_files > 0                                 # not "empty epoch"
-    after = pipe.read_extracted().where(F.col("epoch") == 0).count()
-    assert after == before
-    assert not os.path.exists(f"{out}/extracted/.old_epoch=0")
 
 
 def test_resume_adopts_epoch_bucket_numbering(spark, pages_path, tmp_path_factory):

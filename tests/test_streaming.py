@@ -83,7 +83,7 @@ def test_tick_is_a_plain_batch_run(spark, tmp_path):
     and a lineage tail of two plain aggregations over a given-schema
     read-back, so a 300-doc tick runs at most 6 Spark jobs and nothing is
     written under the checkpoint but the stream's own logs."""
-    from conftest import count_jobs
+    from conftest import count_jobs, files_per_bucket
 
     pages_dir = tmp_path / "pages"
     pages_dir.mkdir()
@@ -102,6 +102,7 @@ def test_tick_is_a_plain_batch_run(spark, tmp_path):
     assert sorted(d.name for d in ckpt.iterdir()) == ["source"]
     urls = {r["url"] for r in pipe.read_extracted().select("url").collect()}
     assert urls == {r["url"] for r in rows}
+    assert set(files_per_bucket(pipe.extracted_path).values()) == {1}
 
 
 def test_replayed_microbatch_leaves_one_lineage_row_set(spark, tmp_path):

@@ -17,14 +17,16 @@ Scale design (BASELINE.json north_rule / SURVEY.md §4):
   resolved per run and returned in ``RunResult``; the manifest records it
   per epoch, so a resume replays it whatever the input size or config.
 - **Checkpointed partition manifests (resume).** The unit of work is the
-  bucket. A manifest row (bucket, row_count, content_hash, run_id,
-  completed_at) is appended only AFTER that bucket's output is durably
+  bucket. A bucket's manifest row (bucket, row_count, content_hash,
+  run_id, completed_at) is written only AFTER its output is durably
   written; a restart filters the input to the buckets missing from the
   manifest with an IN-list (reference analog: existing-output duplicate
   check, unified_ocr_pipeline.py:249-271 — SURVEY.md J2/X6), deletes
   their output dirs and appends them afresh, so a bucket that crashed
   between write and manifest is simply rewritten — idempotent,
-  exactly-once effect.
+  exactly-once effect. Each run then rewrites the epoch's metrics and
+  manifest from the epoch's rows as they now stand, so the lineage never
+  counts a row twice, whatever crash or replay came before.
 - **One code path for batch and cron.** ``run`` takes a path, a
   ``table:`` spec or a DataFrame; a cron tick passes its micro-batch
   DataFrame straight in (``streaming/incremental.py``).
@@ -212,11 +214,7 @@ class ExtractionPipeline:
         (those are exactly the buckets this run may rewrite).
 
         One LIST of the epoch dir finds the bucket dirs that actually exist
-        — deletes are issued only for those, in a small thread pool. The
-        old loop issued one delete RPC per possible bucket (num_buckets
-        serial round-trips even on a fresh-ish store); with auto-sized
-        buckets on S3 that's minutes of driver time for a usually-empty
-        result."""
+        — deletes are issued only for those, in a small thread pool."""
         epoch_dir = f"{self.extracted_path}/epoch={epoch}"
         fs, Path = self._fs(epoch_dir)
         epoch_path = Path(epoch_dir)
@@ -286,11 +284,6 @@ class ExtractionPipeline:
         run_id = uuid.uuid4().hex[:12]
         spark = self.spark
 
-        # a compact_epoch killed mid-swap leaves this epoch stashed under a
-        # hidden dir Spark can't see; running on top of that state would
-        # rewrite only unmanifested buckets and then strand the stash —
-        # recover it BEFORE any read of the extracted table
-        self._recover_compaction_stash(epoch)
         manifest_rows = self._read_manifest(epoch) if resume else []
         num_buckets, salt_factor = self._layout(epoch, manifest_rows, pages)
         done = {r["bucket"] for r in manifest_rows}
@@ -385,18 +378,20 @@ class ExtractionPipeline:
         if rows_written == 0:  # no lineage, and no epoch dir to read back
             return result()
 
-        # read back ONLY the light columns to build manifests + metrics —
-        # only this epoch's dir is listed (basePath keeps epoch and bucket
-        # as columns), so the read-back does not grow with the number of
-        # epochs ever written (columnar scan; extracted_text is hashed but
-        # never fully re-materialized)
+        # read back ONLY the light columns of the whole epoch to build
+        # manifests + metrics — only this epoch's dir is listed (basePath
+        # keeps epoch and bucket as columns), so the read-back does not grow
+        # with the number of epochs ever written (columnar scan;
+        # extracted_text is hashed but never fully re-materialized). After
+        # the clear and the append the dir holds exactly the manifested
+        # buckets plus this run's, so the lineage is an aggregation of the
+        # epoch's durable rows, whichever runs wrote them.
         back = (
             spark.read.schema(_LINEAGE_SCHEMA)
             .option("basePath", self.extracted_path)
             .parquet(f"{self.extracted_path}/epoch={epoch}")
-            .where(F.col("run_id") == run_id)
         )
-        per_partition = back.groupBy("partition_id").agg(
+        per_partition = back.groupBy("run_id", "partition_id").agg(
             F.count("*").alias("row_count"),
             F.sum("raw_bytes").alias("input_bytes"),
             F.sum("total_text_length").alias("extracted_chars"),
@@ -410,23 +405,26 @@ class ExtractionPipeline:
             F.max("warc_ts").alias("last_ts"),
         )
         metrics = (
-            per_partition.withColumn("run_id", F.lit(run_id))
-            .withColumn("epoch", F.lit(epoch))
+            per_partition.withColumn("epoch", F.lit(epoch))
             .withColumn("completed_at", F.current_timestamp())
         )
-        # resume=False means THIS run owns the whole epoch (fresh run or a
-        # replayed micro-batch): dynamic partition overwrite replaces
-        # exactly this epoch's metrics/manifest rows, so a replay leaves
-        # ONE set of lineage rows instead of appending duplicates that
-        # double-count in per-epoch aggregations. resume=True appends —
-        # completed buckets kept their rows and only new ones are added.
-        lineage_mode = "append" if resume else "overwrite"
-        metrics.write.mode(lineage_mode).partitionBy("epoch").parquet(
-            self.metrics_path
-        )
 
+        # both tables replace exactly their epoch=E partition: the overwrite
+        # mode is set on the writer, so it holds whatever the session's
+        # partitionOverwriteMode is
+        def write_lineage(df: DataFrame, path: str) -> None:
+            (
+                df.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("epoch")
+                .parquet(path)
+            )
+
+        write_lineage(metrics, self.metrics_path)
+
+        # one row per bucket: a bucket is only ever written whole, by one run
         manifest = (
-            back.groupBy("bucket")
+            back.groupBy("bucket", "run_id")
             .agg(
                 F.count("*").alias("row_count"),
                 # order-insensitive content hash over (url, extracted_text)
@@ -435,7 +433,6 @@ class ExtractionPipeline:
                 # immune to ANSI bigint overflow.
                 F.expr("bit_xor(row_hash)").alias("content_hash"),
             )
-            .withColumn("run_id", F.lit(run_id))
             .withColumn("epoch", F.lit(epoch))
             .withColumn("completed_at", F.current_timestamp())
             # record the bucket numbering these manifests were computed
@@ -443,13 +440,13 @@ class ExtractionPipeline:
             .withColumn("num_buckets", F.lit(num_buckets))
             .withColumn("salt_factor", F.lit(salt_factor))
         )
-        # buckets counted while the manifest (one row per bucket) is
-        # written — no extra action over the lineage
+        # this run's buckets counted while the manifest is written — no
+        # extra action over the lineage
         totals = Observation(f"totals_{run_id}")
-        manifest = manifest.observe(totals, F.count("*").alias("buckets"))
-        manifest.write.mode(lineage_mode).partitionBy("epoch").parquet(
-            self.manifest_path
+        manifest = manifest.observe(
+            totals, F.count_if(F.col("run_id") == run_id).alias("buckets")
         )
+        write_lineage(manifest, self.manifest_path)
         return result(totals.get["buckets"], rows_written)
 
     def read_extracted(self) -> DataFrame:
@@ -480,71 +477,16 @@ class ExtractionPipeline:
         Path = jvm.org.apache.hadoop.fs.Path
         return Path(path).getFileSystem(conf), Path
 
-    def _recover_compaction_stash(self, epoch: int) -> None:
-        """Recover from a compact_epoch killed inside its swap window:
-        epoch dir missing + ``.old`` stash present → the stash was never
-        swapped back; restore it. Both present → the swap completed but
-        cleanup didn't; drop the stash. Called by both ``run`` and
-        ``compact_epoch`` so no code path ever operates on a half-swapped
-        epoch."""
-        src = f"{self.extracted_path}/epoch={epoch}"
-        old = f"{self.extracted_path}/.old_epoch={epoch}"
-        fs, Path = self._fs(src)
-        if fs.exists(Path(old)):
-            if not fs.exists(Path(src)):
-                fs.rename(Path(old), Path(src))
-            else:
-                fs.delete(Path(old), True)
-
     def compact_epoch(self, epoch: int = 0) -> int:
-        """Iceberg-style small-file compaction for one epoch.
-
-        The hot-path write emits one file per (task, bucket) — correct and
-        contention-free while writing, but after many runs/micro-batches a
-        bucket accumulates small files and every downstream scan pays one
-        open/footer-read per file. This rewrites the epoch so each bucket
-        holds ONE file (`repartition("bucket")` → one task per bucket →
-        one file), then swaps directories: old → `.old`, compacted →
-        live, delete `.old`. A crash mid-swap leaves either the old or the
-        new directory intact under a recoverable name, never neither —
-        and the next `compact_epoch` call detects the stash and restores
-        or drops it automatically before recompacting.
-
-        Content is untouched — manifests (bucket, row_count, content_hash)
-        remain valid, which the compaction test asserts via the same
-        bit_xor(row_hash) the manifest stores. Returns the number of data
-        files after compaction.
-        """
-        spark = self.spark
+        """The number of data files in one epoch, which is compact by
+        construction: one file per bucket. The window's single exchange
+        hash-partitions rows by bucket, so each bucket is written by one
+        task as one file, and a resume deletes and rewrites whole buckets.
+        There is nothing to rewrite."""
         src = f"{self.extracted_path}/epoch={epoch}"
-        tmp = f"{self.extracted_path}/.compact_epoch={epoch}"
-        old = f"{self.extracted_path}/.old_epoch={epoch}"
         fs, Path = self._fs(src)
-        self._recover_compaction_stash(epoch)
         if not fs.exists(Path(src)):
             return 0
-
-        # a stale tmp from a crashed earlier attempt must not survive into
-        # the swap: with dynamic partition overwrite, mode("overwrite")
-        # only replaces the bucket partitions present in THIS df, so a
-        # bucket dir left over from the old attempt would otherwise be
-        # resurrected into the live epoch
-        fs.delete(Path(tmp), True)
-        df = spark.read.parquet(src)  # bucket comes back as partition col
-        (
-            df.repartition("bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(tmp)
-        )
-        if not fs.rename(Path(src), Path(old)):
-            raise IOError(f"compact: could not stash {src}")
-        if not fs.rename(Path(tmp), Path(src)):
-            # roll back: put the original epoch dir back
-            fs.rename(Path(old), Path(src))
-            raise IOError(f"compact: could not swap in {tmp}")
-        fs.delete(Path(old), True)
-
         n_files = 0
         it = fs.listFiles(Path(src), True)
         while it.hasNext():

@@ -12,10 +12,10 @@ staged copy of their payloads. Spark's file-source checkpoint (source
 offsets) provides the never-reprocess-a-file guarantee; the pipeline's
 bucket manifests stay authoritative for exactly-once OUTPUT effects, so
 the two checkpoints compose: a crashed micro-batch replays its files into
-the same epoch, and the run rewrites that epoch's buckets and lineage rows
-instead of adding to them (at-least-once input × idempotent output =
-exactly-once effect — same argument as the reference's existing-output
-check).
+the same epoch, the run rewrites that epoch's buckets, and its lineage is
+recomputed from the epoch's rows, so nothing is added twice (at-least-once
+input × idempotent output = exactly-once effect — same argument as the
+reference's existing-output check).
 
 ``Trigger.AvailableNow`` processes everything present then stops — exactly
 the reference's one-shot cron tick, minus the shell wrapper.
@@ -68,9 +68,8 @@ def run_available_now(
         # run and its empty case is the run's own short-circuit. A replayed
         # batch (crash after run, before the stream checkpoint committed)
         # is idempotent because resume=False makes the run own its epoch:
-        # the epoch's bucket dirs are cleared and rewritten, and the
-        # lineage (metrics/manifest) writes dynamically overwrite that
-        # epoch's partition instead of appending a duplicate row set.
+        # the epoch's bucket dirs are cleared and rewritten, and like every
+        # run it rewrites the epoch's lineage from the rows now there.
         pipeline.run(batch_df, resume=False, epoch=int(epoch_id))
 
     q = (
