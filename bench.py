@@ -439,7 +439,7 @@ def main() -> None:
         ref_rep = _ref_job_sec(spark, pages_path, runs=1)
         ref_secs.append(ref_rep)
         out_dir = f"/tmp/bench_out_{int(time.time() * 1000)}_{rep}"
-        pipe = ExtractionPipeline(spark, out_dir, salt_factor=8)
+        pipe = ExtractionPipeline(spark, out_dir)
         t0 = time.perf_counter()
         res = pipe.run(pages_path, resume=False)
         wall = time.perf_counter() - t0

@@ -51,7 +51,7 @@ spark = get_spark(app_name=f"scale_{{cores}}", cores=cores, shuffle_partitions=c
 
 def one_run(tag):
     pipe = ExtractionPipeline(spark, {out!r} + f"/c{{cores}}_{{tag}}",
-                              num_buckets={buckets}, salt_factor=8,
+                              num_buckets={buckets},
                               max_bytes={max_bytes})
     t0 = time.perf_counter()
     res = pipe.run({pages!r}, resume=False)

@@ -48,7 +48,7 @@ spark = get_spark(app_name=f"submit_scale_{cores}", cores=cores,
 trials = []
 for rep in range(reps):
     shutil.rmtree(out, ignore_errors=True)
-    pipe = ExtractionPipeline(spark, out, num_buckets=64, salt_factor=8,
+    pipe = ExtractionPipeline(spark, out, num_buckets=64,
                               max_bytes=256 * 1024)
     t0 = time.perf_counter()
     res = pipe.run(pages, resume=False)

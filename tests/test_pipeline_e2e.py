@@ -33,9 +33,7 @@ def golden(pages_path):
 @pytest.fixture(scope="module")
 def run_output(spark, pages_path, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("out") / "run")
-    pipe = ExtractionPipeline(
-        spark, out, num_buckets=16, salt_factor=4, max_bytes=MAX_BYTES
-    )
+    pipe = ExtractionPipeline(spark, out, num_buckets=16, max_bytes=MAX_BYTES)
     result = pipe.run(pages_path)
     return pipe, result
 
@@ -164,9 +162,7 @@ def test_resume_of_complete_epoch_job_budget(spark, pages_path, tmp_path):
     epoch's manifest once each, and runs nothing else."""
     from conftest import count_jobs
 
-    pipe = ExtractionPipeline(
-        spark, str(tmp_path / "out"), num_buckets=16, salt_factor=4, max_bytes=MAX_BYTES
-    )
+    pipe = ExtractionPipeline(spark, str(tmp_path / "out"), num_buckets=16, max_bytes=MAX_BYTES)
     first = pipe.run(pages_path)
     res, jobs = count_jobs(spark, lambda: pipe.run(pages_path))
     assert res.buckets_processed == 0 and res.buckets_skipped == first.buckets_processed
@@ -185,7 +181,7 @@ def test_partial_manifest_resume(spark, pages_path, golden, tmp_path_factory, ke
     from pyspark.sql import functions as F
 
     out = str(tmp_path_factory.mktemp("out2") / "run")
-    pipe = ExtractionPipeline(spark, out, num_buckets=16, salt_factor=4, max_bytes=MAX_BYTES)
+    pipe = ExtractionPipeline(spark, out, num_buckets=16, max_bytes=MAX_BYTES)
     full = pipe.run(pages_path)  # baseline full run
 
     # simulate a killed job: drop manifests for some of the buckets, as if
@@ -229,9 +225,7 @@ def test_rerun_under_static_overwrite_mode_keeps_other_epochs_lineage(
     """The lineage writes replace only their own epoch even in a session
     whose partitionOverwriteMode is static: a resume=False rerun of epoch 1
     leaves epoch 0's metrics and manifest rows as they were."""
-    pipe = ExtractionPipeline(
-        spark, str(tmp_path / "out"), num_buckets=8, salt_factor=4, max_bytes=MAX_BYTES
-    )
+    pipe = ExtractionPipeline(spark, str(tmp_path / "out"), num_buckets=8, max_bytes=MAX_BYTES)
     pipe.run(tiny_pages_path, epoch=0)
     pipe.run(tiny_pages_path, epoch=1)
 
@@ -257,9 +251,7 @@ def test_compact_epoch_preserves_content(spark, pages_path, tmp_path_factory):
     from pyspark.sql import functions as F
 
     out = str(tmp_path_factory.mktemp("out") / "compact")
-    pipe = ExtractionPipeline(
-        spark, out, num_buckets=16, salt_factor=4, max_bytes=MAX_BYTES
-    )
+    pipe = ExtractionPipeline(spark, out, num_buckets=16, max_bytes=MAX_BYTES)
     pipe.run(pages_path)
 
     def state():
@@ -284,22 +276,22 @@ def test_compact_epoch_preserves_content(spark, pages_path, tmp_path_factory):
     assert res.buckets_processed == 0 and res.buckets_skipped == len(after)
 
 
-def test_resume_adopts_epoch_bucket_numbering(spark, pages_path, tmp_path_factory):
+def test_resume_adopts_epoch_bucket_numbering(spark, pages_path, tmp_path_factory, monkeypatch):
     """Bucket ids belong to the epoch: a resume on a differently-sized
     cluster (different auto num_buckets) must adopt the manifest's
     recorded numbering, or the anti-join would skip never-processed pages
-    (silent loss) and reprocess others under a conflicting layout."""
+    (silent loss) and reprocess others under a conflicting layout. The
+    epoch is written with an older salt of 4."""
     out = str(tmp_path_factory.mktemp("out") / "elastic")
-    pipe1 = ExtractionPipeline(
-        spark, out, num_buckets=16, salt_factor=4, max_bytes=MAX_BYTES
-    )
-    res1 = pipe1.run(pages_path)
+    pipe1 = ExtractionPipeline(spark, out, num_buckets=16, max_bytes=MAX_BYTES)
+    with monkeypatch.context() as m:
+        m.setattr(pipeline_mod, "DEFAULT_SALT_FACTOR", 4)
+        res1 = pipe1.run(pages_path)
+    assert (res1.num_buckets, res1.salt_factor) == (16, 4)
     assert res1.buckets_processed == 16
 
     # "new cluster": same output dir, different bucket config
-    pipe2 = ExtractionPipeline(
-        spark, out, num_buckets=32, salt_factor=8, max_bytes=MAX_BYTES
-    )
+    pipe2 = ExtractionPipeline(spark, out, num_buckets=32, max_bytes=MAX_BYTES)
     res2 = pipe2.run(pages_path)          # resume=True default
     assert (res2.num_buckets, res2.salt_factor) == (16, 4)  # adopted
     assert res2.buckets_processed == 0 and res2.buckets_skipped == 16
@@ -421,14 +413,17 @@ def test_run_leaves_scan_split_sizing_to_spark(spark, tmp_path, monkeypatch):
     assert seen == [plain]
 
 
-def test_resumed_layout_does_not_stick_to_pipeline(spark, pages_path, tiny_pages_path, tmp_path):
+def test_resumed_layout_does_not_stick_to_pipeline(
+    spark, pages_path, tiny_pages_path, tmp_path, monkeypatch
+):
     """Adopting a resumed epoch's layout is for that run only: the next
-    epoch is written with the pipeline's own configured layout."""
+    epoch is written with the pipeline's own configured layout. Epoch 0
+    is written with an older salt of 4."""
     out = str(tmp_path / "out")
-    ExtractionPipeline(spark, out, num_buckets=16, salt_factor=4, max_bytes=MAX_BYTES).run(
-        tiny_pages_path
-    )
-    pipe = ExtractionPipeline(spark, out, num_buckets=32, salt_factor=8, max_bytes=MAX_BYTES)
+    with monkeypatch.context() as m:
+        m.setattr(pipeline_mod, "DEFAULT_SALT_FACTOR", 4)
+        ExtractionPipeline(spark, out, num_buckets=16, max_bytes=MAX_BYTES).run(tiny_pages_path)
+    pipe = ExtractionPipeline(spark, out, num_buckets=32, max_bytes=MAX_BYTES)
     resumed = pipe.run(tiny_pages_path)
     nxt = pipe.run(tiny_pages_path, epoch=1)
     assert _layouts(spark, pipe) == {(0, 16, 4), (1, 32, 8)}
@@ -436,37 +431,47 @@ def test_resumed_layout_does_not_stick_to_pipeline(spark, pages_path, tiny_pages
     assert (nxt.num_buckets, nxt.salt_factor) == (32, 8)
 
 
-def test_auto_buckets_tiny_input_gets_salt_factor(spark, tiny_pages_path, tmp_path):
+def test_auto_buckets_tiny_input_gets_salt_factor(spark, tiny_pages_path, tmp_path, monkeypatch):
     """A few KB of input must not pay for the cluster-sized bucket count:
-    it gets salt_factor buckets, so salting still splits the heavy host."""
-    pipe = ExtractionPipeline(spark, str(tmp_path / "out"), salt_factor=4, max_bytes=MAX_BYTES)
-    res = pipe.run(tiny_pages_path)
-    assert res.num_buckets == 4
-    assert 0 < res.buckets_processed <= 4
-    assert _written_buckets(pipe) <= set(range(4))
-    assert _layouts(spark, pipe) == {(0, 4, 4)}
-    assert res.rows_written == pipe.read_extracted().count()
+    below 8 buckets it gets one bucket per started MiB, and its salt
+    factor is that bucket count (one host group)."""
+    size = pipeline_mod._size_in_bytes(spark.read.parquet(tiny_pages_path))
+    # the real 1 MiB budget, then one that splits the input 3 ways
+    for per_bucket in (pipeline_mod._BYTES_PER_BUCKET, -(-size // 3)):
+        monkeypatch.setattr(pipeline_mod, "_BYTES_PER_BUCKET", per_bucket)
+        want = -(-size // per_bucket)
+        pipe = ExtractionPipeline(spark, str(tmp_path / f"out{want}"), max_bytes=MAX_BYTES)
+        res = pipe.run(tiny_pages_path)
+        assert (res.num_buckets, res.salt_factor) == (want, want)
+        assert 0 < res.buckets_processed <= want
+        assert _written_buckets(pipe) <= set(range(want))
+        assert _layouts(spark, pipe) == {(0, want, want)}
+        assert res.rows_written == pipe.read_extracted().count()
+    assert want == 3
 
 
 def test_auto_buckets_capped_at_cluster_size(spark):
-    cap = auto_num_buckets(spark, salt_factor=8)
-    group = 8 * pipeline_mod._BYTES_PER_BUCKET  # bytes per run of 8 salted buckets
-    assert auto_num_buckets(spark, salt_factor=8, input_bytes=1 << 50) == cap
-    assert auto_num_buckets(spark, salt_factor=8, input_bytes=0) == 8
-    assert auto_num_buckets(spark, salt_factor=8, input_bytes=group) == 8
-    assert auto_num_buckets(spark, salt_factor=8, input_bytes=group + 1) == 16
-    for size in (1, group * 3 + 5, group * 1000):
-        n = auto_num_buckets(spark, salt_factor=8, input_bytes=size)
+    cap = auto_num_buckets(spark)
+    mib = pipeline_mod._BYTES_PER_BUCKET
+    cores = spark.sparkContext.defaultParallelism
+    assert cap % 8 == 0 and cap >= max(pipeline_mod.DEFAULT_NUM_BUCKETS, 4 * cores)
+    assert auto_num_buckets(spark, input_bytes=1 << 50) == cap
+    assert auto_num_buckets(spark, input_bytes=0) == 1
+    assert auto_num_buckets(spark, input_bytes=mib) == 1
+    assert auto_num_buckets(spark, input_bytes=mib + 1) == 2
+    assert auto_num_buckets(spark, input_bytes=7 * mib) == 7
+    assert auto_num_buckets(spark, input_bytes=7 * mib + 1) == 8
+    assert auto_num_buckets(spark, input_bytes=8 * mib + 1) == 16
+    for size in (8 * mib, mib * 24 + 5, mib * 1000):
+        n = auto_num_buckets(spark, input_bytes=size)
         assert n % 8 == 0 and 8 <= n <= cap
 
 
 def test_explicit_num_buckets_never_resized(spark, tiny_pages_path, tmp_path):
-    pipe = ExtractionPipeline(
-        spark, str(tmp_path / "out"), num_buckets=16, salt_factor=4, max_bytes=MAX_BYTES
-    )
+    pipe = ExtractionPipeline(spark, str(tmp_path / "out"), num_buckets=16, max_bytes=MAX_BYTES)
     res = pipe.run(tiny_pages_path)
     assert res.num_buckets == 16
-    assert _layouts(spark, pipe) == {(0, 16, 4)}
+    assert _layouts(spark, pipe) == {(0, 16, 8)}
 
 
 def test_auto_buckets_resize_per_streaming_tick(spark, tmp_path, monkeypatch):
@@ -486,7 +491,7 @@ def test_auto_buckets_resize_per_streaming_tick(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(pipeline_mod, "_BYTES_PER_BUCKET", 8 * 1024)
     pages_dir = tmp_path / "incoming"
     pages_dir.mkdir()
-    pipe = ExtractionPipeline(spark, str(tmp_path / "out"), salt_factor=2, max_bytes=MAX_BYTES)
+    pipe = ExtractionPipeline(spark, str(tmp_path / "out"), max_bytes=MAX_BYTES)
     rows = generate_pages_rows(64, seed=5, max_bytes=MAX_BYTES)
     for k, batch in enumerate((rows[:4], rows[4:])):
         pq.write_table(
@@ -498,8 +503,8 @@ def test_auto_buckets_resize_per_streaming_tick(spark, tmp_path, monkeypatch):
     layouts = sorted(_layouts(spark, pipe))
     assert [e for e, _, _ in layouts] == [0, 1]
     (_, small, _), (_, large, _) = layouts
-    assert all(sf == 2 for _, _, sf in layouts)
-    assert 2 <= small < large <= auto_num_buckets(spark, salt_factor=2)
+    assert all(sf == min(8, n) for _, n, sf in layouts)
+    assert 1 <= small < large <= auto_num_buckets(spark)
     assert _written_buckets(pipe, 0) <= set(range(small))
     assert _written_buckets(pipe, 1) <= set(range(large))
     assert pipe.read_extracted().count() == len({r["url"] for r in rows[:4]}) + len(
@@ -509,13 +514,18 @@ def test_auto_buckets_resize_per_streaming_tick(spark, tmp_path, monkeypatch):
 
 def test_auto_resume_adopts_recorded_layout(spark, tiny_pages_path, tmp_path, monkeypatch):
     """An auto-sized resume whose own sizing would differ (here: a smaller
-    per-bucket budget) must still adopt the epoch's recorded layout."""
+    per-bucket budget and the current salt) must still adopt the epoch's
+    recorded layout, here one written with an older salt of 4."""
     out = str(tmp_path / "out")
-    first = ExtractionPipeline(spark, out, salt_factor=4, max_bytes=MAX_BYTES).run(tiny_pages_path)
+    with monkeypatch.context() as m:
+        m.setattr(pipeline_mod, "DEFAULT_SALT_FACTOR", 4)
+        first = ExtractionPipeline(spark, out, num_buckets=8, max_bytes=MAX_BYTES).run(
+            tiny_pages_path
+        )
     monkeypatch.setattr(pipeline_mod, "_BYTES_PER_BUCKET", 1024)
-    pipe = ExtractionPipeline(spark, out, salt_factor=4, max_bytes=MAX_BYTES)
+    pipe = ExtractionPipeline(spark, out, max_bytes=MAX_BYTES)
     res = pipe.run(tiny_pages_path)
-    assert (res.num_buckets, res.salt_factor) == (4, 4)
+    assert (res.num_buckets, res.salt_factor) == (8, 4)
     assert res.buckets_processed == 0 and res.buckets_skipped == first.buckets_processed
-    assert _layouts(spark, pipe) == {(0, 4, 4)}
+    assert _layouts(spark, pipe) == {(0, 8, 4)}
     assert pipe.read_extracted().count() == first.rows_written

@@ -168,25 +168,29 @@ def test_asof_join_single_exchange(spark):
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
 
 
-def test_auto_num_buckets_scales_with_cluster(spark, tmp_path):
+def test_auto_num_buckets_scales_with_cluster(spark, tmp_path, monkeypatch):
     """Post-extraction parallelism (the bucket exchange AND the bucketed
     write) is capped at num_buckets; the auto-sizer must therefore track
-    cluster size — ≥ 4× total cores with skew headroom, never below the
-    floor, and always a salt_factor multiple (salted_bucket divisibility)."""
+    cluster size — ≥ 4× total cores with skew headroom, never below
+    DEFAULT_NUM_BUCKETS, and always a multiple of the salt
+    (salted_bucket divisibility)."""
+    from unified_ocr_pipeline_spark.plans import pipeline
     from unified_ocr_pipeline_spark.plans.pipeline import (
         ExtractionPipeline,
         auto_num_buckets,
     )
 
     cores = spark.sparkContext.defaultParallelism
-    n = auto_num_buckets(spark, salt_factor=8, floor=8, per_core=4)
-    assert n >= 4 * cores
+    n = auto_num_buckets(spark)
+    assert n >= 4 * cores and n >= pipeline.DEFAULT_NUM_BUCKETS
     assert n % 8 == 0
-    # floor wins on tiny clusters
-    assert auto_num_buckets(spark, salt_factor=8, floor=10_000) == 10_000
-    # non-divisible raw value rounds UP to a salt multiple
-    n5 = auto_num_buckets(spark, salt_factor=8, floor=1, per_core=5)
-    assert n5 % 8 == 0 and n5 >= 5 * cores
+    # the floor wins on small clusters
+    monkeypatch.setattr(pipeline, "DEFAULT_NUM_BUCKETS", 10_000)
+    assert auto_num_buckets(spark) == 10_000
+    # a non-divisible raw value rounds UP to a salt multiple
+    monkeypatch.setattr(pipeline, "DEFAULT_NUM_BUCKETS", 4 * cores + 1)
+    assert auto_num_buckets(spark) == 8 * (-(-(4 * cores + 1) // 8))
+    monkeypatch.undo()
     # the pipeline default (num_buckets=None) picks the auto size for an
     # input whose byte size is unknown (an RDD-backed DataFrame reports
     # spark.sql.defaultSizeInBytes, like an unanalysed catalog table)

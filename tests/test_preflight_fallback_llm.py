@@ -127,9 +127,7 @@ def test_pipeline_run_preflight_gate(spark, tmp_path):
 
     bad = str(tmp_path / "badpages")
     spark.createDataFrame([(1, "x")], "id long, body string").write.parquet(bad)
-    pipe = ExtractionPipeline(
-        spark, str(tmp_path / "out"), num_buckets=8, salt_factor=4
-    )
+    pipe = ExtractionPipeline(spark, str(tmp_path / "out"), num_buckets=8)
     with pytest.raises(PreflightError):
         pipe.run(bad)
     # an unreadable input fails the same gate, with the full report

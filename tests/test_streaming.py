@@ -29,7 +29,7 @@ def test_available_now_incremental(spark, tmp_path):
     batch1, batch2 = rows[:70], rows[70:]
     _write_batch(pages_dir, batch1, "b1")
 
-    pipe = ExtractionPipeline(spark, out, num_buckets=8, salt_factor=4)
+    pipe = ExtractionPipeline(spark, out, num_buckets=8)
 
     # tick 1: processes batch1
     n1 = run_available_now(spark, str(pages_dir), pipe, ckpt)
@@ -60,7 +60,7 @@ def test_tick_job_count_flat_as_epochs_accumulate(spark, tmp_path):
     pages_dir = tmp_path / "pages"
     pages_dir.mkdir()
     ckpt = str(tmp_path / "ckpt")
-    pipe = ExtractionPipeline(spark, str(tmp_path / "out"), num_buckets=64, salt_factor=8)
+    pipe = ExtractionPipeline(spark, str(tmp_path / "out"), num_buckets=64)
     rows = generate_pages_rows(4 * 150, seed=11)
     jobs = []
     for k in range(4):
@@ -82,13 +82,18 @@ def test_tick_is_a_plain_batch_run(spark, tmp_path):
     empty-check job, no staged copy of the payloads and no re-read of it,
     and a lineage tail of two plain aggregations over a given-schema
     read-back, so a 300-doc tick runs at most 6 Spark jobs and nothing is
-    written under the checkpoint but the stream's own logs."""
+    written under the checkpoint but the stream's own logs. A tick sized
+    below 8 buckets gets one bucket per started MiB of its file, salted
+    by that count: layout (N, N) and at most N bucket dirs."""
     from conftest import count_jobs, files_per_bucket
+
+    from unified_ocr_pipeline_spark.plans import pipeline
 
     pages_dir = tmp_path / "pages"
     pages_dir.mkdir()
     ckpt = tmp_path / "ckpt"
-    pipe = ExtractionPipeline(spark, str(tmp_path / "out"))
+    out = tmp_path / "out"
+    pipe = ExtractionPipeline(spark, str(out))
     rows = generate_pages_rows(2 * 300, seed=13)
     jobs = []
     for k in range(2):
@@ -98,6 +103,20 @@ def test_tick_is_a_plain_batch_run(spark, tmp_path):
         )
         assert n == 1
         jobs.append(j)
+        size = (pages_dir / f"t{k}.parquet").stat().st_size
+        want = -(-size // pipeline._BYTES_PER_BUCKET)
+        assert want < 8
+        layout = (
+            spark.read.parquet(pipe.manifest_path)
+            .where(f"epoch = {k}")
+            .select("num_buckets", "salt_factor")
+            .distinct()
+            .collect()
+        )
+        assert [tuple(r) for r in layout] == [(want, want)]
+        buckets = [d for d in (out / "extracted" / f"epoch={k}").iterdir()
+                   if d.name.startswith("bucket=")]
+        assert 0 < len(buckets) <= want
     assert max(jobs) <= 6, jobs
     assert sorted(d.name for d in ckpt.iterdir()) == ["source"]
     urls = {r["url"] for r in pipe.read_extracted().select("url").collect()}
@@ -112,7 +131,7 @@ def test_replayed_microbatch_leaves_one_lineage_row_set(spark, tmp_path):
     pages_dir = tmp_path / "pages"
     pages_dir.mkdir()
     ckpt = tmp_path / "ckpt"
-    pipe = ExtractionPipeline(spark, str(tmp_path / "out"), num_buckets=8, salt_factor=4)
+    pipe = ExtractionPipeline(spark, str(tmp_path / "out"), num_buckets=8)
     rows = generate_pages_rows(80, seed=17)
     _write_batch(pages_dir, rows, "b0")
     assert run_available_now(spark, str(pages_dir), pipe, str(ckpt)) == 1
@@ -261,7 +280,7 @@ def test_read_extracted_latest_across_epochs(spark, tmp_path):
 
     rows = generate_pages_rows(40, seed=42)
     _write_batch(pages_dir, rows, "b1")
-    pipe = ExtractionPipeline(spark, out, num_buckets=8, salt_factor=4)
+    pipe = ExtractionPipeline(spark, out, num_buckets=8)
     run_available_now(spark, str(pages_dir), pipe, ckpt)
 
     # recrawl 10 urls with a later warc_ts in a second micro-batch

@@ -88,10 +88,10 @@ def test_pipeline_runs_from_catalog_table(spark, tmp_path):
     try:
         out_a = str(tmp_path / "out_path")
         out_b = str(tmp_path / "out_table")
-        ra = ExtractionPipeline(spark, out_a, num_buckets=8, salt_factor=4).run(
+        ra = ExtractionPipeline(spark, out_a, num_buckets=8).run(
             pages
         )
-        rb = ExtractionPipeline(spark, out_b, num_buckets=8, salt_factor=4).run(
+        rb = ExtractionPipeline(spark, out_b, num_buckets=8).run(
             "table:pages_pipe_t"
         )
         assert ra.rows_written == rb.rows_written > 0

@@ -22,6 +22,18 @@ from pyspark.sql import types as T
 
 from ..kernels import document as D
 
+# the input contract: the pages columns extract_stage consumes, with their
+# types (the stream sources read with it; preflight checks inputs against it)
+PAGES_SCHEMA = T.StructType(
+    [
+        T.StructField("url", T.StringType()),
+        T.StructField("warc_ts", T.TimestampType()),
+        T.StructField("html", T.BinaryType()),
+        T.StructField("text", T.StringType()),
+        T.StructField("lang", T.StringType()),
+    ]
+)
+
 SPAN_TYPE = T.ArrayType(
     T.StructType(
         [

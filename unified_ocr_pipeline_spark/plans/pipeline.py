@@ -8,14 +8,16 @@ Scale design (BASELINE.json north_rule / SURVEY.md §4):
   — host locality is preserved (politeness/cache affinity on a real
   cluster) while a heavy host (30%+ of a crawl) is split S ways instead of
   melting one partition. Uniform-hash would also kill skew but destroys
-  host locality; salting keeps both. S and N are knobs.
+  host locality; salting keeps both. S is worked out from N: 8, or N
+  itself when there are fewer than 8 buckets (one host group, nothing to
+  spread a heavy host over).
 - **Bucket count tracks the cluster and the input.** With
   ``num_buckets=None`` each ``run`` sizes the bucket count to the bytes it
-  reads (about one bucket per MiB, a salt multiple, capped at the
-  cluster-sized ``auto_num_buckets``): a 300-doc cron tick writes a
-  handful of files and lineage rows, not 64 of each. The layout is
-  resolved per run and returned in ``RunResult``; the manifest records it
-  per epoch, so a resume replays it whatever the input size or config.
+  reads (about one bucket per MiB, capped at the cluster-sized
+  ``auto_num_buckets``): a 300-doc cron tick writes two or three files
+  and one manifest row per bucket, not 64 of each. The layout is resolved
+  per run and returned in ``RunResult``; the manifest records it per
+  epoch, so a resume replays it whatever the input size or config.
 - **Checkpointed partition manifests (resume).** The unit of work is the
   bucket. A bucket's manifest row (bucket, row_count, content_hash,
   run_id, completed_at) is written only AFTER its output is durably
@@ -55,6 +57,8 @@ from ..sources.tables import read_input
 from .extraction import extract_stage, gate_oversize
 
 DEFAULT_NUM_BUCKETS = 64  # floor of the cluster-sized cap
+# the salt of every new layout with at least this many buckets; a smaller
+# layout is salted by its bucket count (one host group)
 DEFAULT_SALT_FACTOR = 8
 # input bytes per bucket when num_buckets is sized to the input
 _BYTES_PER_BUCKET = 1 << 20
@@ -66,35 +70,30 @@ _LINEAGE_SCHEMA = (
 )
 
 
-def auto_num_buckets(
-    spark: SparkSession,
-    salt_factor: int = DEFAULT_SALT_FACTOR,
-    floor: int = DEFAULT_NUM_BUCKETS,
-    per_core: int = 4,
-    input_bytes: Optional[int] = None,
-) -> int:
+def auto_num_buckets(spark: SparkSession, input_bytes: Optional[int] = None) -> int:
     """Size the bucket count from the cluster and the input, not a constant.
 
     The bucket exchange and the bucketed write are the pipeline's ONLY
     shuffle; their parallelism is capped at num_buckets, so a forgotten
     fixed default serializes the post-extraction stage on a big cluster
-    (64 tasks on 1000 executors). The cap: ``per_core ×`` total cores
-    (headroom for skew/stragglers), at least ``floor``, rounded up to a
-    multiple of ``salt_factor`` (salted_bucket requires divisibility).
+    (64 tasks on 1000 executors). The cap: 4 × total cores (headroom for
+    skew/stragglers), at least ``DEFAULT_NUM_BUCKETS``, rounded up to a
+    multiple of ``DEFAULT_SALT_FACTOR`` (salted_bucket requires
+    divisibility).
 
-    Each bucket also costs a file per writing task plus a metrics and a
-    manifest row, so a small input must not pay for the cap: given
-    ``input_bytes``, the count is ``salt_factor × ceil(input_bytes /
-    (salt_factor × 1 MiB))``, at least ``salt_factor`` and at most the
-    cap. None (input size unknown, e.g. a catalog table) → the cap."""
-    cores = spark.sparkContext.defaultParallelism
-    n = max(floor, per_core * cores)
-    if n % salt_factor:
-        n += salt_factor - (n % salt_factor)
+    Each bucket also costs a file per writing task plus a manifest row, so
+    a small input must not pay for the cap: given ``input_bytes``, the
+    count is ``n = ceil(input_bytes / 1 MiB)``, at least 1. From 8 up it is
+    rounded up to a multiple of 8 and held at the cap. None (input size
+    unknown, e.g. a catalog table) → the cap."""
+    cap = max(DEFAULT_NUM_BUCKETS, 4 * spark.sparkContext.defaultParallelism)
+    cap = -(-cap // DEFAULT_SALT_FACTOR) * DEFAULT_SALT_FACTOR
     if input_bytes is None:
+        return cap
+    n = max(1, -(-input_bytes // _BYTES_PER_BUCKET))
+    if n < DEFAULT_SALT_FACTOR:
         return n
-    host_groups = -(-input_bytes // (salt_factor * _BYTES_PER_BUCKET))
-    return min(n, salt_factor * max(1, host_groups))
+    return min(cap, -(-n // DEFAULT_SALT_FACTOR) * DEFAULT_SALT_FACTOR)
 
 
 def with_host(df: DataFrame) -> DataFrame:
@@ -148,7 +147,6 @@ class ExtractionPipeline:
         spark: SparkSession,
         output_dir: str,
         num_buckets: Optional[int] = None,
-        salt_factor: int = DEFAULT_SALT_FACTOR,
         max_bytes: int = D.DEFAULT_MAX_BYTES,
     ) -> None:
         self.spark = spark
@@ -156,11 +154,10 @@ class ExtractionPipeline:
         self.extracted_path = os.path.join(output_dir, "extracted")
         self.manifest_path = os.path.join(output_dir, "manifests")
         self.metrics_path = os.path.join(output_dir, "metrics")
-        # the configured layout; None → each run sizes the bucket count to
-        # its input and the cluster (auto_num_buckets). Runs never change
-        # these: a run's own layout is resolved by _layout.
+        # the configured bucket count; None → each run sizes it to its
+        # input and the cluster (auto_num_buckets). Runs never change it:
+        # a run's own layout is resolved by _layout.
         self.num_buckets = num_buckets
-        self.salt_factor = salt_factor
         self.max_bytes = max_bytes
 
     # -- manifests -----------------------------------------------------------
@@ -191,9 +188,10 @@ class ExtractionPipeline:
         re-number every page's bucket, and the done-bucket filter would
         then skip pages that were never processed under the new numbering
         (silent loss). Manifest rows record the layout they were written
-        with; a resuming run adopts it. Otherwise the configured layout
-        applies, with ``num_buckets=None`` sized to the input's bytes
-        (``_size_in_bytes``)."""
+        with; a resuming run adopts it. Otherwise N is the configured
+        ``num_buckets``, or with None the input's bytes sized by
+        ``auto_num_buckets`` (``_size_in_bytes``), and the salt is
+        ``min(DEFAULT_SALT_FACTOR, N)``."""
         layouts = {(r["num_buckets"], r["salt_factor"]) for r in manifest_rows}
         if len(layouts) > 1:
             raise ValueError(
@@ -202,12 +200,10 @@ class ExtractionPipeline:
             )
         if layouts:
             return layouts.pop()
-        if self.num_buckets is not None:
-            return self.num_buckets, self.salt_factor
-        n = auto_num_buckets(
-            self.spark, self.salt_factor, input_bytes=_size_in_bytes(pages)
-        )
-        return n, self.salt_factor
+        n = self.num_buckets
+        if n is None:
+            n = auto_num_buckets(self.spark, _size_in_bytes(pages))
+        return n, min(DEFAULT_SALT_FACTOR, n)
 
     def _clear_incomplete_buckets(self, epoch: int, done: set) -> None:
         """Delete output dirs of buckets NOT in the manifest for this epoch
@@ -246,7 +242,6 @@ class ExtractionPipeline:
         pages: DataFrame | str,
         resume: bool = True,
         epoch: int = 0,
-        preflight: bool = True,
     ) -> RunResult:
         """Process one input (batch: epoch=0; incremental: one epoch per
         micro-batch). ``pages`` is the pages DataFrame itself, a parquet
@@ -255,12 +250,12 @@ class ExtractionPipeline:
         rewrites exactly its own partitions, so at-least-once input
         delivery composes to exactly-once output.
 
-        ``preflight`` (P8, reference :63-86): validate backends, kernel
-        imports, and the input schema BEFORE submitting any work job —
-        checked on the schema of the input DataFrame the run scans, so the
-        input is inferred once; raises PreflightError with the full health
-        report on a misconfigured cluster instead of a mid-job executor
-        trace.
+        Preflight (P8, reference :63-86): every run validates backends,
+        kernel imports, and the input schema BEFORE submitting any work
+        job — checked on the schema of the input DataFrame the run scans,
+        so the input is inferred once; raises PreflightError with the full
+        health report on a misconfigured cluster instead of a mid-job
+        executor trace.
 
         Extraction runs on the scan's own splits, sized by Spark's file-split
         formula under the session's ``spark.sql.files.maxPartitionBytes``
@@ -275,12 +270,10 @@ class ExtractionPipeline:
             try:
                 pages = read_input(self.spark, path)
             except Exception:
-                if preflight:
-                    # the full health report, "input unreadable" included
-                    require_healthy(self.spark, path)
+                # the full health report, "input unreadable" included
+                require_healthy(self.spark, path)
                 raise
-        if preflight:
-            require_healthy(self.spark, path, input_df=pages)
+        require_healthy(self.spark, path, input_df=pages)
         run_id = uuid.uuid4().hex[:12]
         spark = self.spark
 
@@ -457,8 +450,9 @@ class ExtractionPipeline:
         (epoch, warc_ts) wins. Within one epoch the pipeline already
         deduped; across micro-batches a recrawled url legitimately appears
         once per epoch, and readers usually want only the newest. The
-        window partitions by url (bucket is a function of url, so at scale
-        pre-partitioned reads keep this shuffle-local)."""
+        window partitions by url, which shuffles the whole table: bucket
+        ids belong to each epoch's own layout, so one url can sit in a
+        different bucket in every epoch."""
         df = self.read_extracted()
         w = Window.partitionBy("url").orderBy(
             F.col("epoch").desc(), F.col("warc_ts").desc()

@@ -21,16 +21,6 @@ from typing import Any, Dict, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
-# columns the extraction stage consumes, with their expected Spark types
-# (plans/extraction.py:extract_stage input contract)
-REQUIRED_INPUT_COLUMNS = {
-    "url": "string",
-    "warc_ts": "timestamp",
-    "html": "binary",
-    "text": "string",
-    "lang": "string",
-}
-
 _KERNEL_MODULES = (
     "unified_ocr_pipeline_spark.kernels.sniff",
     "unified_ocr_pipeline_spark.kernels.pdf_layout",
@@ -94,15 +84,21 @@ def health_check(
         inp: Dict[str, Any] = {"path": input_path, "columns": {}}
         try:
             # schema-only read: parquet footer / catalog metadata,
-            # no data scan (table: specs resolve via sources/tables)
+            # no data scan (table: specs resolve via sources/tables).
+            # The input contract is imported here, not at module level:
+            # plans/extraction imports pandas and every kernel module, and
+            # a failure there belongs in this report, not in the import of
+            # preflight.
             from ..sources.tables import read_input
+            from .extraction import PAGES_SCHEMA
 
             if input_df is None:
                 if spark is None:
                     raise ValueError("no SparkSession to read it with")
                 input_df = read_input(spark, input_path)
             have = {f.name: f.dataType.simpleString() for f in input_df.schema.fields}
-            for col, want in REQUIRED_INPUT_COLUMNS.items():
+            for field in PAGES_SCHEMA.fields:
+                col, want = field.name, field.dataType.simpleString()
                 got = have.get(col)
                 # timestamp_ntz is an acceptable carrier for warc_ts
                 ok = got == want or (want == "timestamp" and got == "timestamp_ntz")

@@ -24,19 +24,12 @@ the reference's one-shot cron tick, minus the shell wrapper.
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
-from pyspark.sql import types as T
 
+from ..plans.extraction import PAGES_SCHEMA
 from ..plans.pipeline import ExtractionPipeline
 
-PAGES_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("warc_ts", T.TimestampType()),
-        T.StructField("html", T.BinaryType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-    ]
-)
+# files per micro-batch (one epoch) of a cron tick
+MAX_FILES_PER_TRIGGER = 64
 
 
 def run_available_now(
@@ -44,10 +37,10 @@ def run_available_now(
     pages_dir: str,
     pipeline: ExtractionPipeline,
     checkpoint_dir: str,
-    max_files_per_trigger: int = 64,
 ) -> int:
     """One cron-tick-equivalent: ingest all currently-available files through
-    the extraction pipeline, then stop. Returns number of micro-batches.
+    the extraction pipeline, then stop, at most ``MAX_FILES_PER_TRIGGER``
+    files per micro-batch. Returns number of micro-batches.
 
     New parquet files dropped into ``pages_dir`` between invocations are
     picked up by the next call; files already in the source checkpoint are
@@ -56,7 +49,7 @@ def run_available_now(
     """
     stream = (
         spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .parquet(pages_dir)
     )
 

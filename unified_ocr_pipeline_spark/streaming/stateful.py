@@ -144,7 +144,7 @@ def run_host_session_stats(
     pages directory; results land in the ``query_name`` in-memory table
     (update mode — dedupe to the last row per host when reading). Returns
     the started StreamingQuery."""
-    from .incremental import PAGES_SCHEMA
+    from ..plans.extraction import PAGES_SCHEMA
 
     stream = (
         spark.readStream.schema(PAGES_SCHEMA)
