@@ -76,3 +76,23 @@ def test_hot_host_occupies_salt_factor_buckets(spark):
         .collect()
     ]
     assert max(sizes) / min(sizes) <= 1.5, sizes
+
+
+def test_bad_num_buckets_rejected_at_construction(spark, tmp_path):
+    """The salt is min(8, N), so an explicit N must split into whole host
+    groups: below 8 or a multiple of 8. Anything else fails when the
+    pipeline is built, before any Spark job, not inside run()."""
+    import pytest
+    from conftest import count_jobs
+
+    from unified_ocr_pipeline_spark.plans.pipeline import ExtractionPipeline
+
+    out = str(tmp_path / "out")
+    for bad in (12, 9, 0, -8):
+        def build():
+            with pytest.raises(ValueError, match="below 8 or a multiple of 8"):
+                ExtractionPipeline(spark, out, num_buckets=bad)
+
+        assert count_jobs(spark, build)[1] == 0, bad
+    for good in (None, 1, 7, 8, 16, 64):
+        assert ExtractionPipeline(spark, out, num_buckets=good).num_buckets == good

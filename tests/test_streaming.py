@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from unified_ocr_pipeline_spark.sources.fixtures import (
     PAGES_ARROW_SCHEMA,
@@ -154,120 +155,54 @@ def test_replayed_microbatch_leaves_one_lineage_row_set(spark, tmp_path):
     assert man.agg({"row_count": "sum"}).first()[0] == n_urls
 
 
-def test_windowed_ingest_stats_with_watermark(spark, tmp_path):
-    from unified_ocr_pipeline_spark.streaming.incremental import windowed_ingest_stats
+class _FailOnce:
+    """Stands in for the pipeline: the first ``run`` raises, before or
+    after calling the real ``run``; every later call is the real one."""
 
-    pages_dir = tmp_path / "wpages"
-    pages_dir.mkdir()
-    rows = generate_pages_rows(150, seed=7)
-    _write_batch(pages_dir, rows, "w1")
+    def __init__(self, pipe, after_run):
+        self.pipe, self.after_run, self.failed = pipe, after_run, False
 
-    q = windowed_ingest_stats(
-        spark, str(pages_dir), str(tmp_path / "wckpt"), query_name="wstats_t"
-    )
-    q.awaitTermination()
-
-    got = spark.sql("SELECT * FROM wstats_t").collect()
-    assert got, "windowed aggregation produced no rows"
-    # every window is exactly 1 hour and counts sum to the input rows
-    assert all((r["window_end"] - r["window_start"]).total_seconds() == 3600 for r in got)
-    assert sum(r["n_pages"] for r in got) == 150
-    langs = {r["lang"] for r in got}
-    assert langs.issubset({"en", "de", "fr", "es", "unk"}) and len(langs) >= 2
+    def run(self, *args, **kwargs):
+        if self.failed:
+            return self.pipe.run(*args, **kwargs)
+        self.failed = True
+        if self.after_run:
+            self.pipe.run(*args, **kwargs)
+        raise RuntimeError("injected tick failure")
 
 
-def test_stateful_host_sessions_across_microbatches(spark, tmp_path):
-    """applyInPandasWithState: per-host session state must persist across
-    micro-batches and match a batch recomputation over the full history."""
-    from unified_ocr_pipeline_spark.streaming.stateful import run_host_session_stats
-
-    pages_dir = tmp_path / "spages"
-    pages_dir.mkdir()
-    rows = generate_pages_rows(150, seed=11)
-    # global time order across files: the streaming fold sees per-host pages
-    # in event-time order, making the batch cross-check exact
-    rows.sort(key=lambda r: r["warc_ts"])
-    for i in range(3):
-        _write_batch(pages_dir, rows[i * 50 : (i + 1) * 50], f"b{i}")
-
-    q = run_host_session_stats(
-        spark, str(pages_dir), str(tmp_path / "sckpt"), query_name="hs_t",
-        session_gap="30 minutes", max_files_per_trigger=1,
-    )
-    q.awaitTermination()
-
-    got_rows = spark.sql("SELECT * FROM hs_t").collect()
-    # update mode: one row per (host, micro-batch it appeared in); hosts
-    # spanning several micro-batches prove state carried over
-    from collections import Counter
-
-    per_host_rows = Counter(r["host"] for r in got_rows)
-    assert max(per_host_rows.values()) >= 2, "no host spanned micro-batches"
-    # final cumulative row per host = the one with max n_pages (monotone)
-    final = {}
-    for r in got_rows:
-        if r["host"] not in final or r["n_pages"] > final[r["host"]]["n_pages"]:
-            final[r["host"]] = r
-
-    # independent batch recomputation of the same fold
-    from pyspark.sql import functions as F
-
-    batch = (
-        spark.read.parquet(str(pages_dir))
-        .select(
-            F.parse_url("url", F.lit("HOST")).alias("host"),
-            "url",
-            F.unix_millis(F.col("warc_ts").cast("timestamp")).alias("ms"),
-            F.octet_length(F.coalesce("html", F.lit(b""))).cast("long").alias("nb"),
-        )
-        .collect()
-    )
-    from collections import defaultdict
-
-    by_host = defaultdict(list)
-    for r in batch:
-        by_host[r["host"]].append((r["ms"], r["url"], r["nb"]))
-    gap = 30 * 60 * 1000
-    for host, items in by_host.items():
-        items.sort()
-        sessions, last = 0, None
-        for ms, _, _ in items:
-            if last is None or ms - last > gap:
-                sessions += 1
-            last = ms
-        f = final[host]
-        assert f["n_pages"] == len(items), host
-        assert f["n_bytes"] == sum(nb for _, _, nb in items), host
-        assert f["first_ms"] == items[0][0] and f["last_ms"] == items[-1][0], host
-        assert f["n_sessions"] == sessions, (host, f["n_sessions"], sessions)
-    assert set(final) == set(by_host)
-
-
-def test_streaming_url_dedup_within_watermark(spark, tmp_path):
-    """dropDuplicatesWithinWatermark keeps the first record per url across
-    micro-batches (bounded state via watermark eviction)."""
-    from unified_ocr_pipeline_spark.streaming.incremental import streaming_url_dedup
+@pytest.mark.parametrize("after_run", [False, True], ids=["before_run", "after_run"])
+def test_failed_tick_is_retried_next_tick(spark, tmp_path, after_run):
+    """A tick whose run raises (before it wrote anything, or after its
+    output was durable but before the stream committed the batch) fails
+    the tick and leaves no query running; the next tick replays the same
+    files into the same epoch, so the epoch holds every url once and one
+    run's lineage (SURVEY.md §2.10: a failed file is retried next tick)."""
+    from pyspark.errors import StreamingQueryException
 
     pages_dir = tmp_path / "pages"
     pages_dir.mkdir()
     ckpt = str(tmp_path / "ckpt")
-    out = str(tmp_path / "dedup_out")
+    out = tmp_path / "out"
+    pipe = ExtractionPipeline(spark, str(out), num_buckets=8)
+    rows = generate_pages_rows(80, seed=19)
+    _write_batch(pages_dir, rows, "b0")
+    flaky = _FailOnce(pipe, after_run)
 
-    rows = generate_pages_rows(60, seed=42)
-    # plant duplicates: re-submit 10 urls (same url, same event time window)
-    dups = [dict(r) for r in rows[:10]]
-    _write_batch(pages_dir, rows, "b1")
-    _write_batch(pages_dir, dups, "b2")
+    with pytest.raises(StreamingQueryException, match="injected tick failure"):
+        run_available_now(spark, str(pages_dir), flaky, ckpt)
+    assert spark.streams.active == []
 
-    q = streaming_url_dedup(
-        spark, str(pages_dir), ckpt, out, max_files_per_trigger=1
-    )
-    q.awaitTermination()
-
-    got = spark.read.parquet(out)
-    urls = [r["url"] for r in got.select("url").collect()]
-    assert len(urls) == len(set(urls))                 # no dup rows emitted
-    assert set(urls) == {r["url"] for r in rows}       # every url exactly once
+    assert run_available_now(spark, str(pages_dir), flaky, ckpt) == 1
+    assert sorted(d.name for d in (out / "extracted").iterdir()
+                  if d.name.startswith("epoch=")) == ["epoch=0"]
+    urls = [r["url"] for r in pipe.read_extracted().select("url").collect()]
+    assert sorted(urls) == sorted({r["url"] for r in rows})
+    man = spark.read.parquet(pipe.manifest_path)
+    met = spark.read.parquet(pipe.metrics_path)
+    run_ids = man.select("run_id").distinct().collect()
+    assert len(run_ids) == 1
+    assert met.select("run_id").distinct().collect() == run_ids
 
 
 def test_read_extracted_latest_across_epochs(spark, tmp_path):
@@ -303,71 +238,3 @@ def test_read_extracted_latest_across_epochs(spark, tmp_path):
     for u in recrawled:
         assert got[u] == 2025                   # newest epoch won
 
-
-def test_streaming_revisits_state_across_microbatches(spark, tmp_path):
-    """Streaming CDX classification: per-surt last-digest state persists
-    across micro-batches; unchanged content → revisit, changed → response
-    (A→B→A is all responses — last-capture semantics, not the batch
-    index's any-prior grouping)."""
-    import datetime as dt
-
-    from unified_ocr_pipeline_spark.streaming.incremental import PAGES_SCHEMA
-    from unified_ocr_pipeline_spark.streaming.stateful import streaming_revisits
-
-    pages_dir = tmp_path / "cpages"
-    pages_dir.mkdir()
-
-    def row(url, minute, body):
-        return {
-            "url": url,
-            "warc_ts": dt.datetime(2024, 1, 1, 0, minute, 0),
-            "html": body.encode(),
-            "text": None,
-            "lang": "en",
-        }
-
-    import os
-
-    # batch 0: page X v1 (response), page Y v1 (response)
-    _write_batch(pages_dir, [
-        row("http://a.com/x", 0, "v1"), row("http://a.com/y", 1, "w1"),
-    ], "b0")
-    # batch 1: X v1 again (revisit — state crossed the micro-batch),
-    # Y v2 (response)
-    _write_batch(pages_dir, [
-        row("http://www.A.com/x", 2, "v1"), row("http://a.com/y", 3, "w2"),
-    ], "b1")
-    # batch 2: Y back to w1 → RESPONSE under last-capture semantics
-    _write_batch(pages_dir, [row("http://a.com/y", 4, "w1")], "b2")
-    # the file source orders micro-batches by modification time: pin
-    # strictly increasing mtimes so b0 < b1 < b2 deterministically
-    for i, name in enumerate(["b0", "b1", "b2"]):
-        os.utime(pages_dir / f"{name}.parquet", (1_700_000_000 + i,) * 2)
-
-    stream = (
-        spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(pages_dir))
-    )
-    q = (
-        streaming_revisits(stream)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("rev_t")
-        .option("checkpointLocation", str(tmp_path / "rckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    got = {
-        (r["surt"], r["ts"]): r["record_type"]
-        for r in spark.sql("SELECT * FROM rev_t").collect()
-    }
-    ms = lambda minute: int(dt.datetime(2024, 1, 1, 0, minute, 0,
-                                        tzinfo=dt.timezone.utc).timestamp() * 1000)
-    assert got[("com,a)/x", ms(0))] == "response"
-    assert got[("com,a)/x", ms(2))] == "revisit"     # www variant, same surt
-    assert got[("com,a)/y", ms(1))] == "response"
-    assert got[("com,a)/y", ms(3))] == "response"    # changed
-    assert got[("com,a)/y", ms(4))] == "response"    # A→B→A: changed again

@@ -19,6 +19,7 @@ offsets into the extracted text.
 
 from __future__ import annotations
 
+import dataclasses
 from dataclasses import dataclass, field
 from typing import Dict, List, Optional
 
@@ -142,32 +143,11 @@ def _html_result(url: str, html_bytes: bytes) -> DocumentResult:
         # row would inflate corpus page aggregates relative to empty
         # PDF/text docs
         return _empty_result(url, sniff.HTML, STATUS_EMPTY)
-    pages = [main_text]  # HTML doc = one logical page of main content
-    is_po = classify_pages(pages)
-    po_number = F.find_po_number(pages)
-    final_po = po_number if po_number else UNKNOWN_PO
-    field_record = F.fallback_regex_extraction(pages, final_po)
-    quality_clauses = field_record.pop("Quality_Clauses")
-
-    spans = [
-        Span(label="main", page_no=1, start=s, end=e) for s, e in offsets
-    ]
+    # HTML doc = one logical page of main content, spanned per main block
     n_img = html_text.lower().count("<img")
-    return DocumentResult(
-        url=url,
-        content_type=sniff.HTML,
-        status=STATUS_OK,
-        total_pages=1,
-        po_page_count=sum(is_po),
-        router_page_count=1 - sum(is_po),
-        total_text_length=len(main_text),
-        extracted_text=main_text,
-        po_number=final_po,
-        spans=spans,
-        fields={k: str(v) for k, v in field_record.items()},
-        quality_clauses=dict(quality_clauses),
-        image_counts=[n_img],
-        total_images=n_img,
+    return dataclasses.replace(
+        _paged_result(url, sniff.HTML, [main_text], [n_img]),
+        spans=[Span(label="main", page_no=1, start=s, end=e) for s, e in offsets],
     )
 
 

@@ -149,6 +149,13 @@ class ExtractionPipeline:
         num_buckets: Optional[int] = None,
         max_bytes: int = D.DEFAULT_MAX_BYTES,
     ) -> None:
+        s = DEFAULT_SALT_FACTOR
+        if num_buckets is not None and (num_buckets < 1 or (num_buckets >= s and num_buckets % s)):
+            # the salt is min(s, N), and N buckets must split into whole host groups
+            raise ValueError(
+                f"num_buckets must be a positive count below {s} or a multiple of {s}; "
+                f"got {num_buckets}"
+            )
         self.spark = spark
         self.output_dir = output_dir
         self.extracted_path = os.path.join(output_dir, "extracted")

@@ -74,105 +74,3 @@ def run_available_now(
     q.awaitTermination()
     return n_batches["n"]
 
-
-def streaming_url_dedup(
-    spark: SparkSession,
-    pages_dir: str,
-    checkpoint_dir: str,
-    out_dir: str,
-    watermark: str = "2 hours",
-    max_files_per_trigger: int = 64,
-):
-    """Streaming ARRIVAL dedup by url within an event-time watermark:
-    ``dropDuplicatesWithinWatermark`` keeps the FIRST record seen per url
-    and evicts each url's dedup state once the watermark passes its event
-    time — bounded state, unlike a plain ``dropDuplicates`` whose state
-    grows with every url ever seen (a non-starter on an endless crawl).
-
-    First-arrival-wins makes this a guard against at-least-once transport
-    redeliveries (the same crawl record delivered twice), NOT a crawl
-    version selector: a genuine recrawl of a url arriving within the
-    watermark is dropped too. Recrawl selection (latest warc_ts wins)
-    belongs downstream — the batch pipeline's window dedup and
-    ``read_extracted_latest`` — where both versions are visible. Use a
-    watermark no longer than the transport's redelivery horizon so real
-    recrawls fall outside it.
-
-    Reference analog: the existing-output duplicate check
-    (unified_ocr_pipeline.py:249-271) — same effect, but as a stateful
-    streaming operator instead of a filesystem probe.
-
-    Appends deduped rows to ``out_dir`` (parquet) exactly-once via the
-    checkpoint. Returns the started StreamingQuery.
-    """
-    stream = (
-        spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(pages_dir)
-    )
-    deduped = stream.withWatermark("warc_ts", watermark).dropDuplicatesWithinWatermark(
-        ["url"]
-    )
-    return (
-        deduped.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", f"{checkpoint_dir}/dedup")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def windowed_ingest_stats(
-    spark: SparkSession,
-    pages_dir: str,
-    checkpoint_dir: str,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    query_name: str = "ingest_stats",
-):
-    """Event-time windowed ingest statistics with a watermark: per
-    (tumbling warc_ts window, lang) page counts and byte totals, tolerating
-    late-arriving crawl records up to ``watermark``.
-
-    The reference has no event-time concept (SURVEY.md §2.10 — warc_ts is
-    a plain column there); this is the Structured Streaming surface the
-    round brief adds: ``readStream → withWatermark → window() groupBy →
-    writeStream``. Update mode + an in-memory sink keeps the demo
-    self-contained; a production deployment points the same query at a
-    parquet/Kafka sink with exactly-once via the checkpoint.
-
-    Returns the started StreamingQuery (caller awaits/ stops it; results
-    readable from the ``query_name`` in-memory table).
-    """
-    from pyspark.sql import functions as F
-
-    stream = spark.readStream.schema(PAGES_SCHEMA).parquet(pages_dir)
-    agg = (
-        stream.withWatermark("warc_ts", watermark)
-        .groupBy(F.window("warc_ts", window).alias("w"), "lang")
-        .agg(
-            F.count("*").alias("n_pages"),
-            F.sum(F.octet_length(F.coalesce("html", F.lit(b"")))).alias("raw_bytes"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "lang",
-            "n_pages",
-            "raw_bytes",
-        )
-    )
-    # complete mode for the in-memory demo sink: update mode appends a new
-    # cumulative row per micro-batch for each updated (window, lang), so a
-    # multi-micro-batch availableNow run would leave duplicate rows in the
-    # memory table; complete rewrites the full result each batch. A real
-    # parquet/Kafka sink would use update/append + watermark eviction.
-    return (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", f"{checkpoint_dir}/windowed")
-        .trigger(availableNow=True)
-        .start()
-    )
