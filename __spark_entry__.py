@@ -2007,10 +2007,11 @@ def _q_quality_lr(spark, sf):
     Column expression, one codegen'd projection."""
     d = _t(spark, sf, "documents")
     t = F.col("text")
-    # gate on the projected score rather than quality_lr_keep(t): measured
-    # neutral (CSE catches the exact-duplicate score subtree here), but it
-    # stops relying on CSE — the gopher gate showed HOF-heavy duplicates
-    # can miss elimination when lambda-variable ids differ
+    # gate on the projected score rather than a second score expression in
+    # the filter: measured neutral (CSE catches the exact-duplicate score
+    # subtree here), but it stops relying on CSE — the gopher gate showed
+    # HOF-heavy duplicates can miss elimination when lambda-variable ids
+    # differ
     return d.select(
         "doc_id", TX.quality_lr_score(t).alias("lr_score")
     ).select(

@@ -247,6 +247,49 @@ def test_rerun_under_static_overwrite_mode_keeps_other_epochs_lineage(
     assert epoch0_lineage() == before
 
 
+def test_resume_after_failed_rerun_rewrites_cleared_buckets(
+    spark, pages_path, golden, tmp_path, monkeypatch
+):
+    """A resume=False rerun clears every bucket dir of the epoch before its
+    data write. If it fails in between, the next (resuming) run must find no
+    completed bucket, not trust the manifest of the run before, and leave
+    every url once with lineage that counts each row once."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    pipe = ExtractionPipeline(spark, str(tmp_path / "out"), num_buckets=8, max_bytes=MAX_BYTES)
+    pipe.run(pages_path)
+
+    parquet = DataFrameWriter.parquet
+
+    def failing_data_write(self, path, *args, **kwargs):
+        if path == pipe.extracted_path:
+            raise RuntimeError("injected data-write failure")
+        return parquet(self, path, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", failing_data_write)
+        with pytest.raises(RuntimeError, match="injected"):
+            pipe.run(pages_path, resume=False)
+
+    resumed = pipe.run(pages_path)
+    assert resumed.buckets_skipped == 0
+    assert resumed.rows_written == len(golden)
+
+    rows = pipe.read_extracted().select("url", "extracted_text").collect()
+    got = {r["url"]: r["extracted_text"] for r in rows}
+    assert len(rows) == len(got) and set(got) == set(golden)
+    assert all(got[u] == g.extracted_text for u, g in golden.items())
+
+    met = spark.read.parquet(pipe.metrics_path).where("epoch = 0")
+    man = spark.read.parquet(pipe.manifest_path).where("epoch = 0")
+    assert (
+        met.agg(F.sum("row_count")).first()[0]
+        == man.agg(F.sum("row_count")).first()[0]
+        == len(golden)
+    )
+
+
 def test_compact_epoch_preserves_content(spark, pages_path, tmp_path_factory):
     from pyspark.sql import functions as F
 

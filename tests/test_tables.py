@@ -1,18 +1,16 @@
-"""Table-format seam (sources/tables.py): `table:<name>` specs resolve
-through the DSv2 catalog — the SAME code path that yields Iceberg scans /
-commits when a production session configures an Iceberg catalog (no
-Iceberg jar in this sandbox, so the session catalog's parquet provider
-stands in; the branch taken is identical)."""
+"""Input seam (sources/tables.py): `table:<name>` specs resolve through
+the DSv2 catalog — the SAME code path that yields Iceberg scans when a
+production session configures an Iceberg catalog (without an Iceberg jar
+the session catalog's parquet provider stands in; the branch taken is
+identical)."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from unified_ocr_pipeline_spark.sources.tables import (
     is_table_spec,
     read_input,
-    write_output,
 )
 
 
@@ -38,41 +36,6 @@ def test_read_input_table_vs_path(spark, tmp_path):
         )
     finally:
         spark.sql("DROP TABLE IF EXISTS pages_seam_t")
-
-
-def test_write_output_table_append_and_overwrite(spark):
-    df = spark.range(5).select(
-        F.col("id"), (F.col("id") % 2).cast("int").alias("part")
-    )
-    spark.sql("DROP TABLE IF EXISTS out_seam_t")
-    try:
-        write_output(df, "table:out_seam_t", partition_cols=["part"],
-                     mode="overwrite")
-        assert spark.read.table("out_seam_t").count() == 5
-        # V1 fallback needs the partition spec repeated on append (Iceberg
-        # reads it from table metadata and ignores the repeat)
-        write_output(df, "table:out_seam_t", partition_cols=["part"],
-                     mode="append")
-        assert spark.read.table("out_seam_t").count() == 10
-    finally:
-        spark.sql("DROP TABLE IF EXISTS out_seam_t")
-
-
-def test_write_output_genuine_errors_not_swallowed(spark):
-    # a typo'd partition column is a user mistake: it must surface as the
-    # ORIGINAL analysis error, never get retried through the V1 fallback
-    # (which would fail with a second, unrelated message)
-    from pyspark.errors import AnalysisException
-
-    df = spark.range(3).select(F.col("id"))
-    spark.sql("DROP TABLE IF EXISTS out_seam_bad")
-    try:
-        with pytest.raises(AnalysisException) as err:
-            write_output(df, "table:out_seam_bad", partition_cols=["no_such_col"],
-                         mode="overwrite")
-        assert "no_such_col" in str(err.value)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS out_seam_bad")
 
 
 def test_pipeline_runs_from_catalog_table(spark, tmp_path):

@@ -279,11 +279,6 @@ def quality_lr_score(text: Column) -> Column:
     return F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 4)
 
 
-def quality_lr_keep(text: Column, threshold: float = 0.5) -> Column:
-    """Keep gate on the rounded classifier score."""
-    return quality_lr_score(text) >= threshold
-
-
 def collapse_token_runs(text: Column) -> Column:
     """Remove CONSECUTIVE repeated tokens ("batch batch batch" → "batch") —
     the classic crawl-text repetition scrub. Pure array expressions, no

@@ -749,6 +749,12 @@ def zipf_fit(
     double, r2 double)`` from an OLS regression of log10(freq) on
     log10(rank).
 
+    ``n_types`` and ``n_tokens`` count the rows the fit ran on: under a
+    finite ``max_rank`` (the default) that is the head of at most
+    ``max_rank`` types and their tokens, not the whole corpus vocabulary
+    (``max_rank=10`` over a larger vocabulary reports ``n_types ==
+    10``). Pass ``max_rank=None`` for corpus-wide counts.
+
     Natural-language corpora sit near slope ≈ −1; a corpus whose slope
     drifts far from that is dominated by boilerplate/templates (too
     steep) or by random/generated junk (too flat) — a cheap whole-corpus

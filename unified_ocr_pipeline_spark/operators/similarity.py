@@ -94,43 +94,6 @@ def _hyperplanes(dim: int, n_tables: int, n_bits: int, seed: int = 42) -> List[L
     ]
 
 
-def lsh_bucket_keys(
-    df: DataFrame,
-    vec_col: str,
-    dim: int,
-    n_tables: int = 4,
-    n_bits: int = 8,
-    seed: int = 42,
-) -> DataFrame:
-    """Add (table, bucket) rows per vector: signed-random-projection LSH.
-
-    Output has one row per (input row × table): columns of input + table int
-    + bucket int. Hyperplanes are seeded literals compiled into the plan —
-    no joins, no Python at runtime.
-    """
-    planes = _hyperplanes(dim, n_tables, n_bits, seed)
-    v = _as_double(F.col(vec_col))
-
-    def bucket_for(table: int) -> Column:
-        bits = None
-        for b in range(n_bits):
-            plane = F.array(*[F.lit(x) for x in planes[table][b]])
-            sign = (dot(v, plane) >= 0).cast("int")
-            term = sign * F.lit(1 << b)
-            bits = term if bits is None else bits + term
-        return bits
-
-    tables = F.explode(
-        F.array(
-            *[
-                F.struct(F.lit(t).alias("table"), bucket_for(t).alias("bucket"))
-                for t in range(n_tables)
-            ]
-        )
-    ).alias("t")
-    return df.select("*", tables).select("*", "t.table", "t.bucket").drop("t")
-
-
 def lsh_bucket_keys_np(
     df: DataFrame,
     id_col: str,
@@ -142,11 +105,10 @@ def lsh_bucket_keys_np(
 ) -> DataFrame:
     """Vectorized SRP-LSH bucketing: one NumPy matmul per Arrow batch
     computes ALL tables' sign bits at once — (batch × dim) @ (dim ×
-    tables·bits). Replaces ``lsh_bucket_keys``'s n_tables × n_bits literal
-    Catalyst dot-product expressions, which cost minutes of codegen +
-    per-row expression evaluation at realistic (L, B); measured ~10× on
-    the driver bench. Identical hyperplanes (same seed), float64 both
-    paths.
+    tables·bits). NumPy, not n_tables × n_bits literal Catalyst
+    dot-product expressions: those cost minutes of codegen + per-row
+    expression evaluation at realistic (L, B); measured ~10× slower in
+    ``bench.py``. Hyperplanes are seeded (``_hyperplanes``), float64.
 
     Output: (id, vec, table, bucket) — one row per (input row × table).
     """

@@ -284,7 +284,17 @@ class ExtractionPipeline:
         run_id = uuid.uuid4().hex[:12]
         spark = self.spark
 
-        manifest_rows = self._read_manifest(epoch) if resume else []
+        if resume:
+            manifest_rows = self._read_manifest(epoch)
+        else:
+            # this run rewrites every bucket, so the epoch's old manifest
+            # goes before any bucket dir is cleared: left until the lineage
+            # rewrite, it would outlive a crash in between and tell the
+            # next resume that the cleared buckets are done
+            manifest_rows = []
+            stale = f"{self.manifest_path}/epoch={epoch}"
+            fs, Path = self._fs(stale)
+            fs.delete(Path(stale), True)
         num_buckets, salt_factor = self._layout(epoch, manifest_rows, pages)
         done = {r["bucket"] for r in manifest_rows}
         skipped = len(done)

@@ -55,7 +55,6 @@ def get_spark(
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -1,28 +1,27 @@
-"""Table-format seam: catalog tables (Iceberg in production) vs parquet
-paths, behind one spec string.
+"""Input seam: catalog tables (Iceberg in production) vs parquet paths,
+behind one spec string.
 
-The north star reads "an Iceberg table of Common-Crawl-style pages" and
-writes back "to Iceberg partitioned by hash(url) buckets". Spark's DSv2
-API makes the table format a SESSION CONFIG, not a code path: when the
-production session configures an Iceberg catalog, e.g. ::
+Spark's DSv2 API makes the input table format a SESSION CONFIG, not a
+code path: when the production session configures an Iceberg catalog,
+e.g. ::
 
     spark.sql.catalog.spark_catalog = org.apache.iceberg.spark.SparkSessionCatalog
     spark.sql.catalog.spark_catalog.type = hive   (or glue / rest / hadoop)
 
 then ``spark.read.table(name)`` yields Iceberg scans (snapshot isolation,
-hidden-partition pruning, metadata-only planning) and
-``df.writeTo(name)`` produces Iceberg commits — with ZERO changes to the
-code below. This sandbox has no Iceberg runtime jar, so tests exercise
-the same API against the built-in session catalog (parquet provider);
-the branch taken is identical.
+hidden-partition pruning, metadata-only planning) with ZERO changes to
+the code below. Without an Iceberg runtime jar on the classpath, the
+tests exercise the same API against the built-in session catalog
+(parquet provider); the branch taken is identical.
 
-Partitioning note: production Iceberg would declare hidden partitioning
-``bucket(N, url)`` and drop the explicit bucket column. This engine
-computes ``bucket`` explicitly (plans/pipeline.salted_bucket) because the
-salted-host variant — pmod(xxhash64(host), ...) groups with per-host salt
-fan-out for skew — is not expressible as a single Iceberg transform; the
-explicit column is also what the resume manifests key on. The two layouts
-are equivalent for pruning: both cluster by a hash of the url/host.
+The output is not a table spec: ``ExtractionPipeline`` writes its own
+partitioned parquet layout, ``extracted/epoch=E/bucket=B``
+(plans/pipeline.py). Production Iceberg would declare hidden
+partitioning ``bucket(N, url)``; the engine computes ``bucket``
+explicitly (plans/pipeline.salted_bucket) because the salted-host
+variant — pmod(xxhash64(host), ...) groups with per-host salt fan-out
+for skew — is not expressible as a single Iceberg transform, and the
+explicit column is also what the resume manifests key on.
 
 Spec grammar (used by ExtractionPipeline.run and the example jobs):
   "table:<catalog.db.name>"  → catalog table via the DSv2 API
@@ -30,8 +29,6 @@ Spec grammar (used by ExtractionPipeline.run and the example jobs):
 """
 
 from __future__ import annotations
-
-from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -55,87 +52,3 @@ def read_input(spark: SparkSession, spec: str) -> DataFrame:
     if is_table_spec(spec):
         return spark.read.table(table_name(spec))
     return spark.read.parquet(spec)
-
-
-def _is_v1_write_unsupported(exc: Exception) -> bool:
-    """True iff the AnalysisException means "this catalog cannot execute
-    DSv2 writes" (the only case the classic-writer fallback is for).
-    Matched by error condition where available (Spark 4's getCondition /
-    3.x's getErrorClass): _LEGACY_ERROR_TEMP_1012 is 'Cannot write into v1
-    table', UNSUPPORTED_FEATURE.* covers RTAS/append-unsupported; the
-    message probe backstops older Sparks that predate error classes."""
-    cond = None
-    for attr in ("getCondition", "getErrorClass"):
-        getter = getattr(exc, attr, None)
-        if getter is not None:
-            try:
-                cond = getter()
-            except Exception:
-                cond = None
-            break
-    if cond and (
-        cond == "_LEGACY_ERROR_TEMP_1012" or cond.startswith("UNSUPPORTED_FEATURE")
-    ):
-        return True
-    msg = str(exc)
-    return "Cannot write into v1 table" in msg or "does not support" in msg
-
-
-def write_output(
-    df: DataFrame,
-    spec: str,
-    partition_cols: Sequence[str] = (),
-    mode: str = "append",
-    provider: Optional[str] = None,
-) -> None:
-    """Write an output: ``table:<name>`` → DSv2 ``writeTo`` (Iceberg
-    commit semantics when the catalog is Iceberg: atomic snapshot,
-    concurrent-writer validation), else partitioned parquet.
-
-    ``mode``: ``append`` (existing table / dir) or ``overwrite``
-    (createOrReplace / dynamic-partition overwrite). ``provider`` only
-    applies to table creation; None uses the catalog's default (Iceberg
-    catalogs create Iceberg tables — the point of the seam)."""
-    if is_table_spec(spec):
-        from pyspark.sql import functions as F
-        from pyspark.errors import AnalysisException
-
-        name = table_name(spec)
-        spark = df.sparkSession
-        exists = spark.catalog.tableExists(name)
-
-        def builder():
-            w = df.writeTo(name)
-            if provider:
-                w = w.using(provider)
-            if partition_cols:
-                w = w.partitionedBy(*[F.col(c) for c in partition_cols])
-            return w
-
-        try:
-            # DSv2 path — what an Iceberg catalog executes (atomic RTAS /
-            # snapshot-append commits)
-            if mode == "overwrite":
-                builder().createOrReplace() if exists else builder().create()
-            else:
-                builder().append() if exists else builder().create()
-        except AnalysisException as exc:
-            # Fall back ONLY for "catalog can't do DSv2 writes" errors —
-            # the built-in V1 session catalog (this sandbox) supports
-            # neither RTAS nor DSv2 appends. Anything else (typo'd
-            # partition column, bad identifier) is a genuine mistake and
-            # must surface as-is, not as a second unrelated failure from
-            # the classic writer.
-            if not _is_v1_write_unsupported(exc):
-                raise
-            writer = df.write.mode(mode)
-            if partition_cols:
-                writer = writer.partitionBy(*partition_cols)
-            # an exception here chains `from exc`, keeping the original
-            # DSv2 error visible in the traceback
-            writer.saveAsTable(name)
-        return
-    writer = df.write.mode(mode)
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(spec)
